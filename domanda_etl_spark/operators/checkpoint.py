@@ -45,11 +45,10 @@ The remaining trades, stated for call sites:
   the r15 static-broadcast bug class.
 - Joins that reuse the preserved partitioning cannot be skew-split by
   AQE (no fresh shuffle to split) — identical to the bucketed-join
-  trade.  `keyed_posture_ok` below is the gate (r17, VERDICT r16
-  §wrong#2): every iterative operator probes its loop-invariant edge
-  table's hottest key ONCE before adopting the keyed posture, and a
-  hot-key graph falls back to plain localCheckpoints, where every loop
-  join replans under AQE with runtime skew-splitting.
+  trade.  KNOWN LIMITATION: a hot key (celebrity node) lands its whole
+  edge set in one task of every round, and nothing falls back.  A
+  hot-key gate returns only with a number: a Zipf / celebrity-node
+  graph on which plain, AQE-planned checkpoints beat this posture.
 
 ONE-OFF (non-loop) keyed checkpoints — the linkpred-trio / deg-rollup
 posture: when a table is materialized once and its consumers join or
@@ -76,24 +75,9 @@ introduced, materialize through a cloned session
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 _AQE_KEY = "spark.sql.adaptive.enabled"
 _SHUFFLE_KEY = "spark.sql.shuffle.partitions"
-
-# Hot-key gate for the keyed loop posture (guide §2.5).  A single join
-# key owning more rows than BOTH bounds means the preserved-partitioning
-# loop would pin that key's rows into ONE task every round with no
-# runtime rescue (the loop subplans materialize statically inside the
-# AQE-off scope, so skew-split never sees them).  SKEW_FACTOR = 8 sits
-# above AQE's skewedPartitionFactor = 5 so the gate does not flap on
-# benign imbalance; SKEW_MIN_ROWS approximates AQE's 256 MB
-# skewedPartitionThresholdInBytes at ~64 B per slim shuffled edge row —
-# a few-million-row task is comfortable at any scale, so fixture-scale
-# inputs always stay keyed and the measured fast posture is unchanged.
-# Module-level (not parameters) so tests can monkeypatch the gate.
-SKEW_FACTOR = 8.0
-SKEW_MIN_ROWS = 4_000_000
 
 
 def loop_partitions(df: DataFrame) -> int:
@@ -103,81 +87,6 @@ def loop_partitions(df: DataFrame) -> int:
     materializing shuffle — proportional to bytes, capped by the
     session's shuffle-partition conf."""
     return max(1, df.rdd.getNumPartitions())
-
-
-def keyed_checkpoint_counted(
-    df: DataFrame, partitions: int | None = None
-) -> tuple[DataFrame, int]:
-    """`keyed_checkpoint` that also returns the materialized ROW COUNT,
-    observed on the checkpoint job itself (CollectMetrics — zero extra
-    jobs; the node passes the child's partitioning through, so the
-    preserved hash layout is unchanged).  The count feeds
-    `keyed_posture_ok`'s free small-table path: when the whole table is
-    under SKEW_MIN_ROWS no partition can exceed the floor, so the
-    histogram probe job is skipped entirely — the skew gate costs
-    NOTHING at bench/fixture scale and one cheap in-memory scan at
-    corpus scale."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = keyed_checkpoint(
-        df.observe(obs, F.count(F.lit(1)).alias("n")), partitions
-    )
-    return out, obs.get["n"]
-
-
-def keyed_posture_ok(df: DataFrame, total_rows: int | None = None) -> bool:
-    """True when no partition of the MATERIALIZED keyed edge table
-    concentrates more rows than max(SKEW_FACTOR x mean, SKEW_MIN_ROWS)
-    (guide §2.5).  `df` must be the keyed checkpoint itself, so the
-    probe is one cheap scan of the in-memory checkpoint blocks — a
-    count per spark_partition_id whose readout is <= numPartitions rows
-    (the same bounded-readout legitimacy class as hits_integer's
-    node-count probe; an exact per-KEY groupBy histogram was measured
-    ~10x dearer on the CC family at sf0.1 and the partition level is
-    what task sizing actually experiences, hash collisions included).
-
-    Iterative operators run this ONCE per call on the loop-invariant
-    edge table after keying it; the per-round tables need no probe
-    (their aggregates leave <= 1 row per vertex, which cannot
-    concentrate).  False means: discard the keyed posture for this run
-    — use the plain-checkpoint loop, where every round's joins replan
-    under AQE and runtime skew-splitting bounds the hot key's task (the
-    pre-r16 posture; values are identical either way, only the physical
-    plan changes).  The one-off keyed materialization that fed the
-    probe is wasted in that rare case — one straggler task once,
-    instead of one per round.
-
-    `total_rows` (from keyed_checkpoint_counted's free Observation)
-    short-circuits the probe: a table wholly under SKEW_MIN_ROWS cannot
-    have a partition over the floor, so no histogram job runs at all.
-    """
-    if total_rows is not None and total_rows <= SKEW_MIN_ROWS:
-        return True
-    hist = [
-        r["c"]
-        for r in df.groupBy(F.spark_partition_id().alias("p"))
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
-    nparts = max(df.rdd.getNumPartitions(), 1)
-    if not hist or nparts <= 1:
-        return True
-    # mean over ALL partitions (empty ones produce no histogram row —
-    # a single hot partition among empties must still trip the gate)
-    mean = sum(hist) / nparts
-    return max(hist) <= max(SKEW_FACTOR * mean, float(SKEW_MIN_ROWS))
-
-
-def loop_checkpointer(keyed: bool, partitions: int):
-    """The per-round checkpoint function for an iterative operator,
-    selected ONCE per call from the `keyed_posture_ok` probe: the keyed
-    (partition-preserving, exchange-eliding) form on uniform keys, the
-    plain AQE-planned form when a hot key needs runtime skew-splitting.
-    """
-    if keyed:
-        return lambda df: keyed_checkpoint(df, partitions)
-    return lambda df: df.localCheckpoint(eager=True)
 
 
 def keyed_checkpoint(df: DataFrame, partitions: int | None = None) -> DataFrame:

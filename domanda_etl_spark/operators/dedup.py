@@ -229,12 +229,9 @@ def connected_components(
     # its own distinct (round 0) / the previous round's keyed checkpoint,
     # so the neighbor join is fully co-located and each round's only
     # edge-scale exchange is gone.
-    from .checkpoint import (
-        keyed_checkpoint_counted,
-        keyed_posture_ok,
-        loop_checkpointer,
-        loop_partitions,
-    )
+    from functools import partial
+
+    from .checkpoint import keyed_checkpoint, loop_partitions
 
     # two-step materialization: the plain checkpoint's AQE-coalesced RDD
     # partition count is the SIZE-ADAPTIVE loop width (loop_partitions —
@@ -248,17 +245,8 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     parts = loop_partitions(sym0)
-    # skew gate (r17, guide §2.5): sym is symmetric, so the hash(b)
-    # layout's partition histogram covers both join orientations; a
-    # near-dup megacluster hub falls back to plain checkpoints — every
-    # round then replans under AQE with runtime skew-splitting instead
-    # of pinning the hot key into one task per round.
-    sym_keyed, n_sym = keyed_checkpoint_counted(
-        sym0.repartition(parts, "b"), parts
-    )
-    keyed = keyed_posture_ok(sym_keyed, n_sym)
-    ck = loop_checkpointer(keyed, parts)
-    sym = sym_keyed if keyed else sym0
+    ck = partial(keyed_checkpoint, partitions=parts)
+    sym = ck(sym0.repartition(parts, "b"))
     labels = (
         sym.select(F.col("a").alias("id"))
         .distinct()

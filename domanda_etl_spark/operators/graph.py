@@ -11,16 +11,12 @@ groupBy per iteration, checkpointed lineage) is identical either way.
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .checkpoint import (
-    keyed_checkpoint,
-    keyed_checkpoint_counted,
-    keyed_posture_ok,
-    loop_checkpointer,
-    loop_partitions,
-)
+from .checkpoint import keyed_checkpoint, loop_partitions
 
 
 def _probe(plan_probe: list | None, tag: str, df: DataFrame) -> None:
@@ -95,17 +91,8 @@ def kcore(
         .localCheckpoint(eager=True)
     )
     parts = loop_partitions(und0)
-    # skew gate (r17, guide §2.5): und is symmetric (both orientations),
-    # so the hash(v) layout's histogram covers both semi-join keys.  A
-    # hot vertex falls back to plain checkpoints and AQE-planned peel
-    # rounds with runtime skew-splitting.
-    und_keyed, n_und = keyed_checkpoint_counted(
-        und0.repartition(parts, "v"), parts
-    )
-    keyed = keyed_posture_ok(und_keyed, n_und)
-    ck = loop_checkpointer(keyed, parts)
-    und = und_keyed if keyed else und0
-    alive = und
+    ck = partial(keyed_checkpoint, partitions=parts)
+    alive = ck(und0.repartition(parts, "v"))
     n_prev = alive.select("v").distinct().count()
     rounds = 0
     while True:
@@ -185,41 +172,17 @@ def pagerank_integer(
     # exchanges run at the size-adaptive width read off the edge
     # checkpoint (loop_partitions — see checkpoint.py).
     parts = loop_partitions(e)
-    # skew gate (r17, guide §2.5 / VERDICT r16 §wrong#2): ONE partition-
-    # histogram probe on the keyed edge checkpoint decides the posture.
-    # A hot src (celebrity node) would otherwise land its whole edge set
-    # in one task of the contrib join EVERY round, with no runtime
-    # rescue — the keyed loop subplans are statically planned, so AQE
-    # skew-split never sees them.  On a hot-key graph: plain checkpoints
-    # (every round replans under AQE, skew-split active) and outdeg via
-    # partial-agg groupBy + join instead of the count-over-window (whose
-    # per-src window task would hold the entire hot key).
-    e_keyed, n_e = keyed_checkpoint_counted(
+    ck = partial(keyed_checkpoint, partitions=parts)
+    nodes = ck(
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    e = ck(
         e.withColumn(
             "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-        ),
-        parts,
+        )
     )
-    keyed = keyed_posture_ok(e_keyed, n_e)
-    ck = loop_checkpointer(keyed, parts)
-    if keyed:
-        nodes = keyed_checkpoint(
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct(),
-            parts,
-        )
-        e = e_keyed
-    else:
-        nodes = (
-            e.select(F.col("src").alias("node"))
-            .union(e.select(F.col("dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        e = e.join(
-            e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src"
-        ).localCheckpoint(eager=True)
     base = (1000 - damping_milli) * init_micro // 1000
     ranks = nodes.select("node", F.lit(init_micro).cast("long").alias("r"))
     for it in range(iterations):
@@ -316,16 +279,9 @@ def hits_integer(
     # 2 x iterations eliminated edge-scale exchanges).  Same
     # doubled-footprint trade as pagerank's undirected edge doubling.
     parts = loop_partitions(e)
-    # skew gate (r17, guide §2.5): both orientations carry a copy, so
-    # both layouts must be hot-free for the keyed posture; a hot
-    # hub/auth node falls back to the plain edge table and AQE-planned
-    # half-steps with runtime skew-splitting.
-    e_src, n_src = keyed_checkpoint_counted(e.repartition(parts, "src"), parts)
-    e_dst, n_dst = keyed_checkpoint_counted(e.repartition(parts, "dst"), parts)
-    keyed = keyed_posture_ok(e_src, n_src) and keyed_posture_ok(e_dst, n_dst)
-    ck = loop_checkpointer(keyed, parts)
-    if not keyed:
-        e_src = e_dst = e
+    ck = partial(keyed_checkpoint, partitions=parts)
+    e_src = ck(e.repartition(parts, "src"))
+    e_dst = ck(e.repartition(parts, "dst"))
     hubs = (
         e.select(F.col("src").alias("node"))
         .distinct()
@@ -355,8 +311,7 @@ def hits_integer(
         else:
             # partition-preserving: agg is hash(node) from its own
             # grouping, the broadcast crossJoin keeps it, so the NEXT
-            # half-step's scores side is exchange-free too (plain under
-            # the skew fallback — ck carries the posture).
+            # half-step's scores side is exchange-free too.
             agg = ck(agg)
             mx = agg.agg(F.max("s").alias("mx"))
             half = agg.crossJoin(F.broadcast(mx)).select(
@@ -380,11 +335,7 @@ def hits_integer(
         # Keyed at hash(node) = hash(dst), the final hub join is also
         # co-located.  Values identical: checkpoints are value-preserving.
         if use_window and it == iterations - 1:
-            auths = (
-                keyed_checkpoint(auths.repartition(parts, "node"), parts)
-                if keyed
-                else auths.localCheckpoint(eager=True)
-            )
+            auths = ck(auths.repartition(parts, "node"))
         hubs = _half(auths, "dst", "src")
         # window form: checkpoint only the round-carrying table (hubs)
         # every other round — auths are consumed within the round and only
@@ -399,11 +350,7 @@ def hits_integer(
         # 4 reps with control: 7.72 -> 6.41 s min warm, values
         # bit-identical).
         if use_window and (it % 2 == 1 or it == iterations - 1):
-            hubs = (
-                keyed_checkpoint(hubs.repartition(parts, "node"), parts)
-                if keyed
-                else hubs.localCheckpoint(eager=True)
-            )
+            hubs = ck(hubs.repartition(parts, "node"))
     return hubs.select(
         "node", F.lit("hub").alias("side"), F.col("v").alias("score_ppm")
     ).unionByName(
@@ -446,14 +393,7 @@ def lpa_labels(
     # repartition of the (caller-materialized) edge list buys `rounds`
     # eliminated edge-scale exchanges.
     parts = loop_partitions(edges)
-    # skew gate (r17, guide §2.5): a hot-`b` vertex would pin its whole
-    # edge set into one task of every round's label join; fall back to
-    # the plain (AQE-planned, skew-splittable) posture on such graphs.
-    eb, n_eb = keyed_checkpoint_counted(
-        edges.repartition(parts, F.col(b)), parts
-    )
-    if not keyed_posture_ok(eb, n_eb):
-        eb = edges
+    eb = keyed_checkpoint(edges.repartition(parts, F.col(b)), parts)
     lbl = edges.select(F.col(a).alias("v")).distinct().withColumn(
         "lbl", F.col("v")
     )
@@ -530,30 +470,18 @@ def ppr_integer(
         "b", F.lit(base).cast("long")
     )
     parts = loop_partitions(e)
-    # skew gate: same probe/posture split as pagerank_integer (the loop
-    # body is literally pagerank's)
-    e_keyed, n_e = keyed_checkpoint_counted(
-        e.withColumn(
-            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
-        ),
-        parts,
-    )
-    keyed = keyed_posture_ok(e_keyed, n_e)
-    ck = loop_checkpointer(keyed, parts)
-    nodes0 = (
+    ck = partial(keyed_checkpoint, partitions=parts)
+    nodes = ck(
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
         .distinct()
         .join(F.broadcast(sd), "node", "left")
     )
-    if keyed:
-        nodes = keyed_checkpoint(nodes0, parts)
-        e = e_keyed
-    else:
-        nodes = nodes0.localCheckpoint(eager=True)
-        e = e.join(
-            e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg")), "src"
-        ).localCheckpoint(eager=True)
+    e = ck(
+        e.withColumn(
+            "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
+        )
+    )
     ranks = nodes.select(
         "node",
         F.when(F.col("b").isNotNull(), F.lit(init_micro))

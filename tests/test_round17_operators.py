@@ -4,15 +4,12 @@
   valid under the documented <= 1,600-cell grid bound (unit-normalized
   embeddings / 0.05 grid). VERDICT r16 §wrong#4: a non-normalized input
   made the collect unbounded — it must now raise loudly instead.
-- keyed_posture_ok (operators/checkpoint.py): the hot-key gate that
-  decides whether an iterative operator may adopt the keyed
-  (preserved-partitioning, statically-planned) loop posture. VERDICT
-  r16 §wrong#2: joins reusing a preserved partitioning cannot be
-  AQE-skew-split, so a celebrity node would land one partition-sized
-  task per round with no runtime rescue. On a skewed fixture the
-  operators must fall back to the plain (AQE-planned) posture — and the
-  values must be identical either way; on uniform data the keyed plans
-  are unchanged (also pinned by tests/test_graph_plan_gates.py).
+- hot keys under the one keyed loop posture (operators/checkpoint.py):
+  every iterative operator keeps its edge table hash-partitioned for
+  the whole loop, so a celebrity node lands its edge set in one task
+  per round (joins over a preserved partitioning cannot be AQE
+  skew-split).  On a star graph the posture must still hold and the
+  values must match a pure-Python reference.
 """
 
 from __future__ import annotations
@@ -26,7 +23,6 @@ from pyspark.sql import functions as F
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from domanda_etl_spark.operators import checkpoint as ckpt  # noqa: E402
 from domanda_etl_spark.operators.dedup import connected_components  # noqa: E402
 from domanda_etl_spark.operators.graph import pagerank_integer  # noqa: E402
 
@@ -34,9 +30,8 @@ QS = entrymod.queries()
 
 
 def _star_edges(spark, n=400):
-    """Hub-and-spoke: node 0 -> every spoke (the celebrity-node shape
-    the skew gate exists for) plus a short chain so the graph is not
-    degenerate."""
+    """Hub-and-spoke: node 0 -> every spoke (the celebrity-node shape)
+    plus a short chain so the graph is not degenerate."""
     spokes = spark.range(1, n).select(
         F.lit(0).alias("src"), F.col("id").alias("dst")
     )
@@ -50,57 +45,36 @@ def _out_partitioning(df) -> str:
     return str(df._jdf.queryExecution().executedPlan().outputPartitioning())
 
 
-def test_keyed_posture_ok_flags_hot_key(spark, monkeypatch):
-    # the probe reads the MATERIALIZED keyed layout's partition histogram
-    e = (
-        _star_edges(spark)
-        .repartition(64, "src")
-        .localCheckpoint(eager=True)
-    )
-    # default gate: the absolute floor (SKEW_MIN_ROWS) keeps tiny
-    # fixtures keyed — a 399-row hot partition is one comfortable task
-    assert ckpt.keyed_posture_ok(e)
-    # with the floor lowered to fixture scale, the hub partition (399 of
-    # 448 rows) must trip the factor gate: mean = 7 rows, 8 x 7 = 56 << 399
-    monkeypatch.setattr(ckpt, "SKEW_MIN_ROWS", 0)
-    assert not ckpt.keyed_posture_ok(e)
-    # uniform keys stay keyed even with no floor
-    u = (
-        spark.range(400)
-        .select((F.col("id") % 97).alias("src"), F.col("id").alias("dst"))
-        .repartition(64, "src")
-        .localCheckpoint(eager=True)
-    )
-    assert ckpt.keyed_posture_ok(u)
+def _pagerank_reference(edges, iterations):
+    """pagerank_integer's recurrence at its default damping (850 milli)
+    and initial rank (1e6 micro), one Python loop over (src, dst)."""
+    outdeg: dict[int, int] = {}
+    for u, _ in edges:
+        outdeg[u] = outdeg.get(u, 0) + 1
+    ranks = {v: 1_000_000 for e in edges for v in e}
+    for _ in range(iterations):
+        incoming = dict.fromkeys(ranks, 0)
+        for u, v in edges:
+            incoming[v] += ranks[u] // outdeg[u]
+        ranks = {v: 150_000 + 850 * s // 1000 for v, s in incoming.items()}
+    return ranks
 
 
-def test_pagerank_skew_fallback_plain_posture_same_values(spark, monkeypatch):
+def test_pagerank_hot_key_keyed_posture_matches_reference(spark):
     e = _star_edges(spark)
-    keyed_out = pagerank_integer(e, iterations=3)
-    # keyed posture (default floor): final ranks carry hash(node)
-    assert "hashpartitioning(node" in _out_partitioning(keyed_out)
-    monkeypatch.setattr(ckpt, "SKEW_MIN_ROWS", 0)
-    monkeypatch.setattr(ckpt, "SKEW_FACTOR", 0.0)
-    plain_out = pagerank_integer(e, iterations=3)
-    # fallback taken: the plain checkpoints re-enter the planner as
-    # UnknownPartitioning, so every loop join replans under AQE (where
-    # runtime skew-splitting bounds the hot key's task)
-    assert "hashpartitioning(node" not in _out_partitioning(plain_out)
-    # physical-only change: values bit-identical across postures
-    assert sorted(map(tuple, keyed_out.collect())) == sorted(
-        map(tuple, plain_out.collect())
-    )
+    out = pagerank_integer(e, iterations=3)
+    # the hub does not change the posture: final ranks carry hash(node)
+    assert "hashpartitioning(node" in _out_partitioning(out)
+    ref = _pagerank_reference([(r["src"], r["dst"]) for r in e.collect()], 3)
+    assert {r["node"]: r["rank_micro"] for r in out.collect()} == ref
 
 
-def test_connected_components_skew_fallback_same_values(spark, monkeypatch):
+def test_connected_components_hot_key_one_component(spark):
     e = _star_edges(spark, n=120).selectExpr("src AS id_a", "dst AS id_b")
-    keyed_out = connected_components(e).collect()
-    monkeypatch.setattr(ckpt, "SKEW_MIN_ROWS", 0)
-    monkeypatch.setattr(ckpt, "SKEW_FACTOR", 0.0)
-    plain_out = connected_components(e).collect()
-    assert sorted(map(tuple, keyed_out)) == sorted(map(tuple, plain_out))
+    out = connected_components(e).collect()
+    assert len(out) == 120
     # one component rooted at the min id
-    assert {r["component"] for r in plain_out} == {0}
+    assert {r["component"] for r in out} == {0}
 
 
 def _write_embeddings(tmp_path, values):

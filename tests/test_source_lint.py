@@ -24,10 +24,6 @@ COLLECT_WHITELIST = {
     # probe that picks the size-gated normalization form (r12) — two
     # scalars, once per call, never row-scale
     "operators/graph.py": 1,
-    # keyed_posture_ok: the ONE-ROW (max key count, total) skew probe
-    # that picks the loop posture (r17) — one partial-agg pass, two
-    # scalars, once per operator call, never row-scale
-    "operators/checkpoint.py": 1,
 }
 
 

@@ -1,20 +1,16 @@
 """Dump `.explain("formatted")` of named registry queries to
-plans/r16/<query>_<tag>.txt — the before/after plan evidence for the
-round-16 optimization work.
+plans/<round>/<query>_<tag>.txt — the before/after plan evidence for a
+round's optimization work.
 
-Usage: python tools/explain_r16.py <tag> <query> [<query> ...]
+Usage: python tools/explain.py --round rNN <tag> <query> [<query> ...]
 
 For the iterative graph/CC queries the query-level plan is
-checkpoint-truncated; for those this tool ALSO captures the loop-body
-plans via the operators' `plan_probe` hook where one is reachable from
-the entry function (the same hook tests/test_graph_plan_gates.py uses),
-by re-running the underlying operator on the query's own edge
-derivation where practical. Query-level formatted plans are always
-captured.
+checkpoint-truncated; tools/loopbody.py captures their loop bodies.
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -25,23 +21,26 @@ from domanda_etl_spark.session import get_spark
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--round", required=True, help="plans/ subdirectory, e.g. r17")
+    ap.add_argument("tag")
+    ap.add_argument("names", nargs="+", metavar="query")
+    args = ap.parse_args()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r16",
+        args.round,
     )
     os.makedirs(out_dir, exist_ok=True)
-    spark = get_spark(app_name="explain-r16")
+    spark = get_spark(app_name=f"explain-{args.round}")
     qs = entrymod.queries()
-    for n in names:
+    for n in args.names:
         df = qs[n](spark, sf_dir)
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        path = os.path.join(out_dir, f"{n}_{tag}.txt")
+        path = os.path.join(out_dir, f"{n}_{args.tag}.txt")
         with open(path, "w") as f:
             f.write(txt)
         print(f"wrote {path} ({len(txt)} bytes)")

@@ -1,6 +1,6 @@
 """Dump the ITERATIVE operators' loop-body physical plans to
-plans/r16/loopbody_<op>_<tag>.txt — the before/after evidence for the
-round-16 partition-preserving checkpoint rework.  Query-level
+plans/<round>/loopbody_<op>_<tag>.txt — the before/after evidence for
+the partition-preserving checkpoint work.  Query-level
 `.explain` output for these queries is checkpoint-truncated (the
 returned DataFrame is one Scan ExistingRDD), so the honest plan
 evidence is the per-round plan collected through the operators'
@@ -13,11 +13,12 @@ aggregates and exchanges appear for any edge table); BFS has no
 operator-level hook, so its level body is reconstructed inline from the
 entry-file code on the real sf0.1 purchase graph and labeled as such.
 
-Usage: python tools/loopbody_r16.py <tag>
+Usage: python tools/loopbody.py --round rNN <tag>
 """
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
@@ -35,8 +36,8 @@ from domanda_etl_spark.operators.graph import (
 )
 from domanda_etl_spark.session import get_spark
 
-OUT = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r16"
+PLANS = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans"
 )
 
 
@@ -49,8 +50,8 @@ def _edges(spark, n=120, chords=(1, 2, 7)):
     return e
 
 
-def _dump(name: str, tag: str, probes: list) -> None:
-    path = os.path.join(OUT, f"loopbody_{name}_{tag}.txt")
+def _dump(out: str, name: str, tag: str, probes: list) -> None:
+    path = os.path.join(out, f"loopbody_{name}_{tag}.txt")
     with open(path, "w") as f:
         for i, (ptag, plan) in enumerate(probes):
             f.write(f"==== probe {i}: {ptag} ====\n{plan}\n")
@@ -61,28 +62,33 @@ def _dump(name: str, tag: str, probes: list) -> None:
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    os.makedirs(OUT, exist_ok=True)
-    spark = get_spark(app_name="loopbody-r16")
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--round", required=True, help="plans/ subdirectory, e.g. r17")
+    ap.add_argument("tag")
+    args = ap.parse_args()
+    tag = args.tag
+    out = os.path.join(PLANS, args.round)
+    os.makedirs(out, exist_ok=True)
+    spark = get_spark(app_name=f"loopbody-{args.round}")
 
     probes: list = []
     pagerank_integer(_edges(spark), iterations=2, plan_probe=probes)
-    _dump("pagerank", tag, probes)
+    _dump(out, "pagerank", tag, probes)
 
     probes = []
     seeds = spark.range(5).select(F.col("id").alias("node"))
     ppr_integer(_edges(spark), seeds, iterations=2, plan_probe=probes)
-    _dump("ppr", tag, probes)
+    _dump(out, "ppr", tag, probes)
 
     probes = []
     hits_integer(_edges(spark), iterations=2, plan_probe=probes)
-    _dump("hits_window_form", tag, probes)
+    _dump(out, "hits_window_form", tag, probes)
 
     probes = []
     hits_integer(
         _edges(spark), iterations=2, window_norm_max_nodes=0, plan_probe=probes
     )
-    _dump("hits_scale_form", tag, probes)
+    _dump(out, "hits_scale_form", tag, probes)
 
     probes = []
     ed = _edges(spark).selectExpr("src AS a", "dst AS b")
@@ -90,16 +96,16 @@ def main() -> None:
         eager=True
     )
     lpa_labels(e2, rounds=2, plan_probe=probes)
-    _dump("lpa", tag, probes)
+    _dump(out, "lpa", tag, probes)
 
     probes = []
     kcore(_edges(spark, n=30, chords=(1,)), k=3, a="src", b="dst", plan_probe=probes)
-    _dump("kcore", tag, probes)
+    _dump(out, "kcore", tag, probes)
 
     probes = []
     cc_e = _edges(spark, n=40, chords=(1,)).selectExpr("src AS id_a", "dst AS id_b")
     connected_components(cc_e, plan_probe=probes)
-    _dump("connected_components", tag, probes)
+    _dump(out, "connected_components", tag, probes)
 
     # BFS level body, reconstructed from the entry-file loop on the real
     # sf0.1 purchase graph (the entry function has no probe hook); the
@@ -167,7 +173,7 @@ def main() -> None:
         finally:
             spark.conf.set("spark.sql.adaptive.enabled", _aqe)
             spark.conf.set("spark.sql.shuffle.partitions", _shuf)
-        _dump("bfs_level", tag, [("bfs_level1_nxt", plan_txt)])
+        _dump(out, "bfs_level", tag, [("bfs_level1_nxt", plan_txt)])
         spark.stop()
         return
     else:
@@ -178,6 +184,7 @@ def main() -> None:
             .join(visited.select("node"), "node", "left_anti")
         )
     _dump(
+        out,
         "bfs_level",
         tag,
         [("bfs_level1_nxt", nxt._jdf.queryExecution().executedPlan().toString())],
