@@ -22,11 +22,10 @@ from .checkpoint import keyed_checkpoint, loop_partitions
 def _probe(plan_probe: list | None, tag: str, df: DataFrame) -> None:
     """Append (tag, physical-plan string) of a loop-body DataFrame to
     `plan_probe` BEFORE it is checkpointed away. The iterative graph ops
-    run jobs at build time, so the registry-wide plan gates in
-    tests/test_plans_quality.py skip them — and their returned DataFrames
-    are checkpoint-truncated, hiding the loop body. This hook is how
-    tests/test_graph_plan_gates.py inspects the real per-iteration plans
-    (VERDICT r11 §next#3: the RUNS_JOBS_AT_BUILD gate hole)."""
+    return checkpoint-truncated DataFrames, so the registry-wide plan
+    gates in tests/test_plans_quality.py never see the loop body. This
+    hook is how tests/test_graph_plan_gates.py inspects the real
+    per-iteration plans."""
     if plan_probe is not None:
         plan_probe.append(
             (tag, df._jdf.queryExecution().executedPlan().toString())

@@ -3,48 +3,58 @@ asserted against the actual executed plans so they can't silently rot."""
 
 from __future__ import annotations
 
+import pytest
+
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
+from tools.dump_plans import ARROW_PYTHON_OK, build_registry
 
 QS = entrymod.queries()
 
 
-def plan_of(spark, name):
-    return QS[name](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+@pytest.fixture(scope="module")
+def registry(spark):
+    """Every registry query built once at default conf:
+    name -> (executed plan string, jobs run while building)."""
+    return build_registry(spark, SF_DIR)
 
 
-def test_flagship_all_dims_broadcast(spark):
-    p = plan_of(spark, "flagship_regional_revenue")
+def plan_of(registry, name):
+    return registry[name][0]
+
+
+def test_flagship_all_dims_broadcast(registry):
+    p = plan_of(registry, "flagship_regional_revenue")
     assert p.count("BroadcastHashJoin") == 4
     assert "SortMergeJoin" not in p
 
 
-def test_scan_filters_pushed_to_parquet(spark):
-    p = plan_of(spark, "scan_filter_distinct")
+def test_scan_filters_pushed_to_parquet(registry):
+    p = plan_of(registry, "scan_filter_distinct")
     assert "PushedFilters: [IsNotNull" in p
     # column pruning: the scan must not read the full lineitem schema
     read_schema = p.split("ReadSchema:")[1].split("\n")[0]
     assert "l_extendedprice" not in read_schema
 
 
-def test_latest_wins_is_single_shuffle(spark):
-    p = plan_of(spark, "latest_wins_dedup")
+def test_latest_wins_is_single_shuffle(registry):
+    p = plan_of(registry, "latest_wins_dedup")
     assert p.count("Exchange") == 1
 
 
-def test_enrich_join_broadcasts_supplier_sides(spark):
-    p = plan_of(spark, "domanda_unify_mini")
+def test_enrich_join_broadcasts_supplier_sides(registry):
+    p = plan_of(registry, "domanda_unify_mini")
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
 
-def test_range_join_is_broadcast_not_shuffled_nested_loop(spark):
-    p = plan_of(spark, "range_join_value_bands")
+def test_range_join_is_broadcast_not_shuffled_nested_loop(registry):
+    p = plan_of(registry, "range_join_value_bands")
     assert "BroadcastNestedLoopJoin" in p
     assert "CartesianProduct" not in p
 
 
-def test_no_python_udfs_in_scalar_queries(spark):
+def test_no_python_udfs_in_scalar_queries(registry):
     # every scalar function must stay JVM-side (no BatchEvalPython /
     # ArrowEvalPython nodes anywhere in the scalar suite)
     for name in [
@@ -54,7 +64,7 @@ def test_no_python_udfs_in_scalar_queries(spark):
         "scalar_time_hhmm",
         "scalar_join_date_normalize",
     ]:
-        p = plan_of(spark, name)
+        p = plan_of(registry, name)
         assert "EvalPython" not in p, name
 
 
@@ -79,10 +89,10 @@ def test_no_forced_broadcast_on_fact_tables(spark):
         )
 
 
-def test_q18_aggregates_below_join(spark):
+def test_q18_aggregates_below_join(registry):
     """The per-order quantity rollup must sit BELOW the orders/customer
     joins (join input shrinks ~4x; HAVING survivors are tiny)."""
-    p = plan_of(spark, "tpch_q18_large_volume_customers")
+    p = plan_of(registry, "tpch_q18_large_volume_customers")
     agg_pos = p.find("HashAggregate")
     join_pos = min(
         x for x in (p.find("SortMergeJoin"), p.find("BroadcastHashJoin")) if x >= 0
@@ -156,32 +166,32 @@ def test_aqe_splits_skewed_join_without_salting(spark):
                 spark.conf.set(k, v)
 
 
-def test_gopher_repetition_is_map_only(spark):
+def test_gopher_repetition_is_map_only(registry):
     """All repetition stats are higher-order array expressions: the plan
     must contain no key-shuffle and no join (the only Exchange allowed is
     the documented round-robin widening on single-split fixtures)."""
-    p = plan_of(spark, "gopher_repetition")
+    p = plan_of(registry, "gopher_repetition")
     assert "Exchange hashpartitioning" not in p
     assert "Join" not in p
 
 
-def test_kmeans_assign_zero_shuffle_zero_join(spark):
+def test_kmeans_assign_zero_shuffle_zero_join(registry):
     """Centroids are baked in as a literal array; assignment is a pure map
     expression — no Exchange-by-key, no join anywhere in the plan."""
-    p = plan_of(spark, "kmeans_assign")
+    p = plan_of(registry, "kmeans_assign")
     assert "Exchange hashpartitioning" not in p
     assert "Join" not in p
 
 
-def test_contamination_screen_broadcasts_benchmark(spark):
+def test_contamination_screen_broadcasts_benchmark(registry):
     """The benchmark shingle set is eval-set-sized -> must probe via
     broadcast, never a shuffled join of the full corpus side."""
-    p = plan_of(spark, "contamination_screen")
+    p = plan_of(registry, "contamination_screen")
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
 
 
-def test_tpch_q2_broadcasts_bounded_dims_only(spark):
+def test_tpch_q2_broadcasts_bounded_dims_only(spark, registry):
     """Q2's bounded dims (supplier/nation/region) carry explicit hints;
     part is fact-scale (grows with SF) so it must NOT be hinted — AQE
     decides at runtime. The analyzed tree inlines the shared `eligible`
@@ -189,7 +199,7 @@ def test_tpch_q2_broadcasts_bounded_dims_only(spark):
     times."""
     analyzed = QS["tpch_q2_min_cost_supplier"](spark, SF_DIR)._jdf.queryExecution().analyzed().toString()
     assert analyzed.count("ResolvedHint") == 6
-    p = plan_of(spark, "tpch_q2_min_cost_supplier")
+    p = plan_of(registry, "tpch_q2_min_cost_supplier")
     assert "CartesianProduct" not in p
 
 
@@ -204,52 +214,52 @@ def test_tpch_q16_q20_no_forced_part_broadcast(spark):
         assert analyzed.count("ResolvedHint") == n_hints, name
 
 
-def test_tpch_q7_prunes_nations_below_fact_joins(spark):
+def test_tpch_q7_prunes_nations_below_fact_joins(registry):
     """The (n1∧n2)∨(n2∧n1) OR can't be factored by Catalyst, so the
     single-side implications are applied by hand: both nation scans carry
     a pushed In(n_name, [..2 values..]) filter, and the supplier/customer
     pruning joins sit BELOW the fact-scale shuffle joins (deepest
     BroadcastHashJoin prints after the deepest SortMergeJoin)."""
-    p = plan_of(spark, "tpch_q7_volume_shipping")
+    p = plan_of(registry, "tpch_q7_volume_shipping")
     assert p.count("In(n_name") >= 2, "2-nation filter not pushed to nation scans"
     if "SortMergeJoin" in p:
         assert p.rfind("BroadcastHashJoin") > p.rfind("SortMergeJoin")
 
 
-def test_tpch_q8_prunes_customer_to_region_below_fact_joins(spark):
+def test_tpch_q8_prunes_customer_to_region_below_fact_joins(registry):
     """Customer must be cut to ASIA (via the nation⋈region key set) before
     the orders⋈customer shuffle: the region filter is pushed to the region
     scan and the customer-pruning broadcast join sits below the deepest
     shuffle join."""
-    p = plan_of(spark, "tpch_q8_market_share")
+    p = plan_of(registry, "tpch_q8_market_share")
     assert "EqualTo(r_name,ASIA)" in p or "r_name" in p.split("PushedFilters")[1]
     if "SortMergeJoin" in p:
         assert p.rfind("BroadcastHashJoin") > p.rfind("SortMergeJoin")
 
 
-def test_shard_packing_no_single_partition_exchange(spark):
+def test_shard_packing_no_single_partition_exchange(registry):
     """The shard prefix sum must be the range-partitioned form: a window
     partitioned by the doc_id range bucket, NEVER a global orderBy window
     (which plans as Exchange SinglePartition — one task doing the whole
     corpus's cumulative sum)."""
-    p = plan_of(spark, "shard_packing")
+    p = plan_of(registry, "shard_packing")
     assert "Exchange SinglePartition" not in p
     assert "Window" in p
 
 
-def test_token_block_packing_no_single_partition_exchange(spark):
+def test_token_block_packing_no_single_partition_exchange(registry):
     """Same rule for the GPT-style block packer: the virtual-token-stream
     offsets come from the range-bucketed prefix sum, never a global
     window."""
-    p = plan_of(spark, "token_block_packing")
+    p = plan_of(registry, "token_block_packing")
     assert "Exchange SinglePartition" not in p
     assert "Window" in p
 
 
-def test_tpch_q21_rewrite_aggregates_not_self_join(spark):
+def test_tpch_q21_rewrite_aggregates_not_self_join(registry):
     """Q21's EXISTS/NOT-EXISTS pair must be the per-order aggregate
     rewrite: no cartesian/nested-loop self-join of lineitem."""
-    p = plan_of(spark, "tpch_q21_waiting_suppliers")
+    p = plan_of(registry, "tpch_q21_waiting_suppliers")
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
     assert p.count("HashAggregate") >= 4  # partial+final for the two rollups
@@ -294,90 +304,76 @@ def test_runtime_bloom_filter_prunes_fact_side(spark):
                 spark.conf.set(k, v)
 
 
-def test_round3_map_only_operators(spark):
+def test_round3_map_only_operators(registry):
     """pii_redaction and doc_chunking are pure projection/flatMap shapes:
     no key shuffle, no join anywhere (the only allowed Exchange is the
     documented round-robin widening on single-split fixtures)."""
     for name in ["pii_redaction", "doc_chunking"]:
-        p = plan_of(spark, name)
+        p = plan_of(registry, name)
         assert "Exchange hashpartitioning" not in p, name
         assert "Join" not in p, name
 
 
-def test_unpivot_is_expand_no_exchange(spark):
-    p = plan_of(spark, "unpivot_melt")
+def test_unpivot_is_expand_no_exchange(registry):
+    p = plan_of(registry, "unpivot_melt")
     assert "Expand" in p
     assert "Exchange" not in p
 
 
-def test_funnel_is_single_shuffle(spark):
+def test_funnel_is_single_shuffle(registry):
     """The timeline fold rides ONE hash exchange (collect per user); the
     sort+walk happens inside the aggregate, not as extra stages."""
-    p = plan_of(spark, "funnel_analysis")
+    p = plan_of(registry, "funnel_analysis")
     assert p.count("Exchange hashpartitioning") == 1
     assert "Join" not in p
 
 
-def test_interval_overlap_is_broadcast_nested_loop(spark):
-    p = plan_of(spark, "interval_overlap_join")
+def test_interval_overlap_is_broadcast_nested_loop(registry):
+    p = plan_of(registry, "interval_overlap_join")
     assert "BroadcastNestedLoopJoin" in p
     assert "CartesianProduct" not in p
 
 
-def test_ivf_probe_is_broadcast_no_all_pairs(spark):
+def test_ivf_probe_is_broadcast_no_all_pairs(registry):
     """IVF: cell assignment is a literal-centroid map expression and the
     probe join broadcasts the tiny query side — the corpus is never
     shuffled pairwise."""
-    p = plan_of(spark, "similarity_topk_ivf")
+    p = plan_of(registry, "similarity_topk_ivf")
     assert "BroadcastHashJoin" in p
     assert "SortMergeJoin" not in p
     assert "CartesianProduct" not in p
 
 
-def test_bucketed_join_zero_exchange(spark):
+def test_bucketed_join_zero_exchange(registry):
     """Bucketed layout must eliminate EVERY shuffle in the join+groupBy
     pipeline: matching bucket specs feed SortMergeJoin directly and the
     bucket-key aggregation reuses the same distribution."""
-    p = plan_of(spark, "bucketed_join_colocated")
+    p = plan_of(registry, "bucketed_join_colocated")
     assert "SortMergeJoin" in p
     assert "Exchange" not in p, p
 
 
-def test_partitioned_write_prunes_partitions(spark):
+def test_partitioned_write_prunes_partitions(registry):
     """The partition-column IN filter must resolve at the directory level
     (PartitionFilters), and column pruning must drop the unused key from
     the read schema."""
-    p = plan_of(spark, "partitioned_write_prune")
+    p = plan_of(registry, "partitioned_write_prune")
     assert "PartitionFilters: [o_orderpriority#" in p
     assert "IN (1-URGENT,5-LOW)" in p
     assert "o_orderkey" not in p.split("ReadSchema:")[1].splitlines()[0]
 
 
-def test_registry_wide_no_cartesian_no_python(spark):
-    """Global gate over the ENTIRE query registry: no CartesianProduct and no
-    row-level Python eval anywhere (the only Python allowed is the
-    Arrow-batched mapInPandas in the multimodal family). Queries that
-    execute jobs at build time (sinks, streaming, iterative, bounded
-    driver-state collects) are exercised by their own tests and skipped
-    here to keep this a pure plan inspection."""
-    runs_jobs_at_build = entrymod.RUNS_JOBS_AT_BUILD
-    # ...plus the Spark 4 Python UDTF surface proof (Arrow-batched lateral
-    # expansion, python_udtf_chunks) — same legitimacy class as the
-    # DataSource API scan: it exists to prove the extension plumbing.
-    arrow_python_ok = {"image_features_fake", "media_frame_extract", "image_decode_roundtrip",
-                       "image_resize_boxfilter", "audio_wav_features",
-                       "python_udtf_chunks"}
-    # registry-WIDE, not just the driver window: every pure-plan query in
-    # queries() must be free of CartesianProduct and row-level Python
-    names = [n for n in QS if n not in runs_jobs_at_build]
-    for n in names:
-        p = plan_of(spark, n)
+def test_registry_wide_no_cartesian_no_python(registry):
+    """Global gate over the ENTIRE query registry, job-runners included:
+    no CartesianProduct and no row-level Python eval anywhere (the only
+    Python allowed is the Arrow-batched ARROW_PYTHON_OK set)."""
+    for n, (p, _) in registry.items():
         assert "CartesianProduct" not in p, n
-        if n not in arrow_python_ok:
+        if n not in ARROW_PYTHON_OK:
             assert "EvalPython" not in p, n
 
 
-def test_registry_wide_single_partition_only_after_partial_agg(spark):
+def test_registry_wide_single_partition_only_after_partial_agg(registry):
     """Global gate: an `Exchange SinglePartition` is allowed ONLY when its
     input is an AGGREGATE — either a partial/merge agg (one pre-combined
     row per map task: global sums, scalar subqueries, min/max spines) or
@@ -388,13 +384,10 @@ def test_registry_wide_single_partition_only_after_partial_agg(spark):
     class (a global row_number window that funneled the whole corpus
     through one partition before r6's TakeOrdered rewrite) — a raw scan,
     project, join, or window feeding a SinglePartition exchange still
-    fails. Same job-running skips as the gate above."""
-    runs_jobs_at_build = entrymod.RUNS_JOBS_AT_BUILD
+    fails. Every registry query is inspected, job-runners included."""
     bad = []
-    for n in QS:
-        if n in runs_jobs_at_build:
-            continue
-        lines = plan_of(spark, n).splitlines()
+    for n, (p, _) in registry.items():
+        lines = p.splitlines()
         for i, line in enumerate(lines):
             if "Exchange SinglePartition" not in line:
                 continue
@@ -406,6 +399,16 @@ def test_registry_wide_single_partition_only_after_partial_agg(spark):
             ):
                 bad.append((n, line.strip()[:80], feeder.strip()[:80]))
     assert not bad, f"row-scale SinglePartition exchanges: {bad}"
+
+
+def test_registry_counts_jobs_at_build(registry):
+    """The build-job count is measured, not listed by hand: iterative
+    checkpointing and streaming (jobs on stream threads, outside the
+    caller's job group) both register; pure plans run nothing."""
+    assert registry["kcore_decomposition"][1] > 0
+    assert registry["streaming_batch_equiv"][1] > 0
+    assert registry["scan_filter_distinct"][1] == 0
+    assert registry["domanda_unify_mini"][1] == 0
 
 
 def test_pipeline_loader_stage(spark, tmp_path):
@@ -422,7 +425,7 @@ def test_pipeline_loader_stage(spark, tmp_path):
     assert metrics["rows_in"] == table.read(spark).count() + metrics["removed_null_gds"]
 
 
-def test_setsim_verification_joins_pinned(spark):
+def test_setsim_verification_joins_pinned(registry):
     """ADVICE r13 (high): EliminateResolvedHint attaches a hint to the
     nearest Join ABOVE the hinted subtree and does not look through Join
     nodes, so `cand.hint("shuffle_hash").join(s1).join(s2)` pinned only
@@ -431,7 +434,7 @@ def test_setsim_verification_joins_pinned(spark):
     documented). The fix hints the intermediate result too; this gate is
     explain-only (no execution) so the sf10-unprobed verification stage
     is at least strategy-verified on every pytest run."""
-    p = plan_of(spark, "setsim_prefix_join")
+    p = plan_of(registry, "setsim_prefix_join")
     assert "BroadcastExchange" not in p
     assert "SortMergeJoin" not in p
     # posting-list self-join + two verification joins, all shuffled-hash
@@ -455,19 +458,19 @@ def test_flagship_codegen_compiles_strict(spark):
         spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
-def test_flagship_regexp_node_budget(spark):
+def test_flagship_regexp_node_budget(registry):
     """Companion budget gate: the pre-fix flagship plan carried ~2,000
     regexp nodes (every supplier branch re-deriving the 3-regex date
     normalization per join-key comparison); the barrier-staged form
     carries ~450. A regression that re-inlines the normalization into
     the join predicates blows this budget long before it re-overflows
     codegen, so this fails earlier and cheaper than the strict gate."""
-    p = plan_of(spark, "domanda_pipeline_full")
+    p = plan_of(registry, "domanda_pipeline_full")
     n = p.count("regexp_replace") + p.count("regexp_extract")
     assert n <= 600, f"flagship regexp node count {n} exceeds budget 600"
 
 
-def test_dedup_family_no_corpus_scale_broadcast(spark):
+def test_dedup_family_no_corpus_scale_broadcast(registry):
     """r14 family-wide gate (the setsim r13 bug class, hunted via the
     outlier adjudication's plan audit): every join in the dedup /
     similarity family whose BOTH sides are corpus-scale (posting lists,
@@ -489,12 +492,12 @@ def test_dedup_family_no_corpus_scale_broadcast(spark):
         "incremental_dedup_newbatch",
         "setsim_prefix_join",
     ]:
-        p = plan_of(spark, name)
+        p = plan_of(registry, name)
         assert "BroadcastExchange" not in p, name
         assert "SortMergeJoin" not in p, name
 
 
-def test_no_static_broadcast_of_checkpoint_outputs(spark):
+def test_no_static_broadcast_of_checkpoint_outputs(registry):
     """r15 gate (VERDICT r14 §next#6, generalized beyond the dedup
     family): a localCheckpoint output is a LogicalRDD whose stats use
     default column widths — a measured ~13x UNDER-estimate for two-long
@@ -507,82 +510,17 @@ def test_no_static_broadcast_of_checkpoint_outputs(spark):
     fact-scan sweep missed (an ExistingRDD scan is not a fact-table
     scan); all are now shuffle_hash-pinned and this gate keeps the class
     dead: no BroadcastExchange over an unbounded ExistingRDD subtree in
-    any checkpoint-using query.  Unkeyed aggregates and limits bound the
+    any registry query (only an ExistingRDD build side can flag, so no
+    query needs pre-filtering).  Unkeyed aggregates and limits bound the
     build and stay allowed (e.g. degree_assortativity's n_nodes count)."""
-    import inspect
-
     from tools.broadcast_sweep import CHECKPOINT_BROADCAST_OK, sweep_plan
 
-    # Package helpers that localCheckpoint INTERNALLY — a query calling
-    # one of these checkpoints without the literal appearing in its own
-    # source, so grepping only for 'localCheckpoint' would let it escape
-    # the gate (ADVICE r15 low: the same coverage-gap shape that let the
-    # r14 fact-scan sweep miss the class).
-    CKPT_HELPERS = (
-        "connected_components",  # operators/dedup.py
-        "kcore",                 # operators/graph.py
-        "pagerank_integer",
-        "hits_integer",
-        "lpa_labels",
-        "ppr_integer",
-    )
-
-    def _uses_ckpt(name: str) -> bool:
-        src = inspect.getsource(QS[name])
-        return "localCheckpoint" in src or any(h in src for h in CKPT_HELPERS)
-
-    # iterative graph/clustering queries that run jobs at build — still
-    # safe to PLAN (no sinks/streams); kept under the gate so an edit
-    # cannot reintroduce the class
-    HAND_PLANNABLE = {
-        "kcore_decomposition",
-        "pagerank_purchases",
-        "hits_purchase_graph",
-        "ppr_seeded_retrieval",
-        "lpa_modularity_audit",
-        "bfs_reachability_levels",
-        "semdedup_cluster_prune",
-        "dedup_canonical_selection",
-        "dedup_cluster_assignment",
-        "grid_density_clusters",
-        # r17: khop adopted the BFS posture (keyed edge copies + keyed
-        # frontier checkpoints) — runs jobs at build, still plannable
-        "khop_reachability",
-    }
-    # the hand list must stay a SUPERSET of every RUNS_JOBS_AT_BUILD
-    # query that checkpoints via the graph/dedup iterators — a future
-    # helper-checkpointing query can't silently escape the gate.  Sink /
-    # streaming queries (not plannable without side effects) checkpoint
-    # only via sinks/versioned.py, which CKPT_HELPERS deliberately
-    # excludes, so this assertion stays precise.
-    NOT_PLANNABLE = {  # write/stream at build: planning them runs the sink
-        "merge_upsert", "versioned_sink_roundtrip",
-        "versioned_retention_roundtrip", "partitioned_merge_roundtrip",
-        "partitioned_delete_roundtrip", "cli_load_roundtrip",
-        "restore_count_check", "small_file_compaction",
-    }
-    escaped = {
-        n
-        for n in entrymod.RUNS_JOBS_AT_BUILD
-        if n in QS and _uses_ckpt(n) and n not in NOT_PLANNABLE
-    } - HAND_PLANNABLE
-    assert not escaped, (
-        f"checkpoint-using RUNS_JOBS_AT_BUILD queries missing from the "
-        f"gate's hand list: {escaped}"
-    )
-
-    names = {
-        n
-        for n in QS
-        if n not in entrymod.RUNS_JOBS_AT_BUILD and _uses_ckpt(n)
-    } | HAND_PLANNABLE
-    flags = []
-    for n in sorted(names):
-        flags += [
-            f
-            for f in sweep_plan(n, plan_of(spark, n))
-            if f[1] == "checkpoint-output" and n not in CHECKPOINT_BROADCAST_OK
-        ]
+    flags = [
+        f
+        for n, (p, _) in registry.items()
+        for f in sweep_plan(n, p)
+        if f[1] == "checkpoint-output" and n not in CHECKPOINT_BROADCAST_OK
+    ]
     assert not flags, f"static broadcast of checkpoint outputs: {flags}"
 
 

@@ -58,13 +58,18 @@ def test_stream_windowed_aggregation(spark, tmp_path):
         .start()
     )
     q.awaitTermination(120)
+    # keyed by the window start's HH:mm in the session time zone: a
+    # minute-only key maps 10:00 and 11:00 to the same entry
     rows = {
-        (r["w"]["start"].minute, r["k"]): (r["n"], r["total"])
-        for r in spark.sql("SELECT * FROM win_agg").collect()
+        (r["start"], r["k"]): (r["n"], r["total"])
+        for r in spark.sql(
+            "SELECT date_format(w.start, 'HH:mm') AS start, k, n, total FROM win_agg"
+        ).collect()
     }
-    assert rows[(0, "a")] == (2, 3.0)   # 10:00-10:30 window
-    assert rows[(30, "b")] == (1, 3.0)  # 10:30-11:00 window
-    assert rows[(0, "a")] != rows.get((0, "b"))
+    assert rows[("10:00", "a")] == (2, 3.0)
+    assert rows[("10:30", "b")] == (1, 3.0)
+    assert rows[("11:00", "a")] == (1, 4.0)
+    assert ("10:00", "b") not in rows
 
 
 @pytest.mark.slow

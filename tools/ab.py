@@ -1,4 +1,4 @@
-"""Round-15 interleaved A/B harness for the VERDICT r14 adjudications.
+"""Interleaved A/B harness for per-query wall-time adjudications.
 
 Runs the named queries INTERLEAVED (round-robin, N reps each) at sf0.1
 with a control query in the rotation, printing per-rep wall seconds —
@@ -6,7 +6,7 @@ the protocol from PERF.md r12-r14 (same-session interleaving defeats
 the 1.26x host-drift band that sequential runs conflate with plan
 changes).  Usage:
 
-    python tools/ab_r15.py q1 q2 control [reps]
+    python tools/ab.py q1 q2 control [reps]
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ def main() -> None:
     names = [a for a in sys.argv[1:] if not a.isdigit()]
     reps = int(sys.argv[-1]) if sys.argv[-1].isdigit() else 4
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(app_name="ab-r15")
+    spark = get_spark(app_name="ab")
     qs = entrymod.queries()
     # warmup: pay JIT/codegen once
     entrymod.entry(spark).write.format("noop").mode("overwrite").save()

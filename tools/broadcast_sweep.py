@@ -1,6 +1,6 @@
 """Registry-wide static-broadcast sweep (the r14 triage, now a tool).
 
-Flags every BroadcastExchange in every pure-plan query whose build
+Flags every BroadcastExchange in every registry query whose build
 subtree is either
   (a) a `Scan ExistingRDD` — a localCheckpoint output.  LogicalRDD
       stats are row-count-based with default column widths, a measured
@@ -48,6 +48,9 @@ CHECKPOINT_BROADCAST_OK: dict[str, str] = {
     # (createDataFrame, not a checkpoint); the range-join plan gate
     # REQUIRES BroadcastNestedLoopJoin here — broadcast is the point
     "range_join_value_bands": "3-row literal bands dimension",
+    # the broadcast side is the literal expectations contract table
+    # (createDataFrame, not a checkpoint), same class as the bands above
+    "column_profile_contract": "literal expectations contract table",
 }
 
 
@@ -131,22 +134,14 @@ def sweep_plan(name: str, plan: str) -> list[tuple[str, str, str]]:
 
 
 def main() -> int:
-    import __spark_entry__ as entrymod
     from domanda_etl_spark.session import get_spark
+    from tools.dump_plans import build_registry
 
     spark = get_spark(app_name="broadcast-sweep")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    qs = entrymod.queries()
-    names = sys.argv[1:] or [
-        n for n in qs if n not in entrymod.RUNS_JOBS_AT_BUILD
-    ]
+    registry = build_registry(spark, sf_dir, sys.argv[1:] or None)
     all_flags: list[tuple[str, str, str]] = []
-    for n in names:
-        try:
-            plan = qs[n](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        except Exception as exc:  # keep sweeping; a broken query has its own tests
-            print(f"SKIP {n}: {exc}", file=sys.stderr)
-            continue
+    for n, (plan, _) in registry.items():
         for f in sweep_plan(n, plan):
             all_flags.append(f)
             print(f"FLAG {f[1]:<18} {f[0]}: {f[2]}", flush=True)
@@ -155,7 +150,7 @@ def main() -> int:
         if f[1] == "checkpoint-output" and f[0] not in CHECKPOINT_BROADCAST_OK
     ]
     print(
-        f"--- swept={len(names)} flags={len(all_flags)} "
+        f"--- swept={len(registry)} flags={len(all_flags)} "
         f"checkpoint-output-unwhitelisted={len(bad)}"
     )
     spark.stop()

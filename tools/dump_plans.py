@@ -208,38 +208,60 @@ HEADLINE = [
 ]
 
 
-def posture_stats(spark, qs, sf_dir: str) -> list[str]:
-    """Registry-wide physical-plan posture: one pass over every pure-plan
-    query (job-runners skipped — they are oracle/test-verified end-to-end),
+# Python the plan gates allow: Arrow-batched stages only (the multimodal
+# mapInPandas family, and the Spark 4 Python UDTF surface proof, which
+# plans as ArrowEvalPythonUDTF), never row-at-a-time eval.
+ARROW_PYTHON_OK = frozenset({
+    "image_features_fake",
+    "media_frame_extract",
+    "image_decode_roundtrip",
+    "image_resize_boxfilter",
+    "audio_wav_features",
+    "python_udtf_chunks",
+})
+
+
+def build_registry(spark, sf_dir: str, names=None) -> dict[str, tuple[str, int]]:
+    """Build each registry query once: name -> (executed plan string,
+    jobs it ran while building). Jobs are the growth of the newest job id
+    in the driver's status store, so jobs that streaming queries run on
+    their own stream threads (outside the caller's job group) count too."""
+    qs = entrymod.queries()
+    jsc = spark.sparkContext._jsc.sc()
+    store = jsc.statusStore()
+
+    def newest_job() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = store.jobsList(None)
+        return jobs.apply(0).jobId() if jobs.size() else -1
+
+    out = {}
+    for name in names or qs:
+        before = newest_job()
+        df = qs[name](spark, sf_dir)
+        jobs = newest_job() - before
+        out[name] = (df._jdf.queryExecution().executedPlan().toString(), jobs)
+    return out
+
+
+def posture_stats(spark, sf_dir: str) -> list[str]:
+    """Registry-wide physical-plan posture: one pass over every query,
     counting the properties the scale claims rest on. The same properties
     are ASSERTED per-query in tests/test_plans_quality.py; this table is
     the aggregate evidence."""
     import re
 
-    n = n_pushed = n_bcast = n_smj = n_python = n_cartesian = 0
+    registry = build_registry(spark, sf_dir)
+    n_pushed = n_bcast = n_smj = n_python = n_cartesian = 0
     n_single_ok = n_single_bad = 0
-    # same Arrow-batched whitelist as test_plans_quality (the UDTF surface
-    # proof plans as ArrowEvalPythonUDTF — batched, not row-at-a-time)
-    arrow_ok = {
-        "image_features_fake",
-        "media_frame_extract",
-        "image_decode_roundtrip",
-        "image_resize_boxfilter",
-        "audio_wav_features",
-        "python_udtf_chunks",
-    }
-    for name in qs:
-        if name in entrymod.RUNS_JOBS_AT_BUILD:
-            continue
-        plan = qs[name](spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        n += 1
+    for name, (plan, _) in registry.items():
         if re.search(r"PushedFilters: \[[^\]]", plan):
             n_pushed += 1
         if "BroadcastHashJoin" in plan:
             n_bcast += 1
         if "SortMergeJoin" in plan:
             n_smj += 1
-        if "EvalPython" in plan and name not in arrow_ok:
+        if "EvalPython" in plan and name not in ARROW_PYTHON_OK:
             n_python += 1
         if "CartesianProduct" in plan:
             n_cartesian += 1
@@ -255,11 +277,12 @@ def posture_stats(spark, qs, sf_dir: str) -> list[str]:
                     n_single_ok += 1
                 else:
                     n_single_bad += 1
+    n_runners = sum(1 for _, jobs in registry.values() if jobs)
     return [
         "## Registry-wide plan posture",
         "",
-        f"{n} pure-plan queries inspected ({len(entrymod.RUNS_JOBS_AT_BUILD)}"
-        " job-running queries verified by their own oracles/tests instead):",
+        f"{len(registry)} queries inspected ({n_runners} of them run Spark"
+        " jobs while building, measured from the status store):",
         "",
         "| property | count |",
         "|---|---|",
@@ -288,7 +311,7 @@ def main() -> None:
         "multimodal mapInPandas stage.",
         "",
     ]
-    out += posture_stats(spark, qs, sf_dir)
+    out += posture_stats(spark, sf_dir)
     for name in HEADLINE:
         df = qs[name](spark, sf_dir)
         plan = df._jdf.queryExecution().explainString(
