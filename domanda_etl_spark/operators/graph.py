@@ -13,7 +13,7 @@ from __future__ import annotations
 
 from functools import partial
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .checkpoint import keyed_checkpoint, loop_partitions
@@ -183,7 +183,30 @@ def pagerank_integer(
         )
     )
     base = (1000 - damping_milli) * init_micro // 1000
-    ranks = nodes.select("node", F.lit(init_micro).cast("long").alias("r"))
+    return _rank_loop(
+        e, nodes, F.lit(init_micro), F.lit(base), iterations, damping_milli,
+        ck, "pagerank_step", plan_probe,
+    )
+
+
+def _rank_loop(
+    e: DataFrame,
+    nodes: DataFrame,
+    r0: Column,
+    teleport: Column,
+    iterations: int,
+    damping_milli: int,
+    ck,
+    tag: str,
+    plan_probe: list | None,
+) -> DataFrame:
+    """The integer rank iteration shared by pagerank_integer and
+    ppr_integer: r'(v) = teleport(v) + damping_milli * SUM_{u->v}(r(u) //
+    outdeg(u)) // 1000, starting from r0.  `e` is the hash(src) edge
+    checkpoint with `outdeg` folded in, `nodes` the hash(node) node
+    checkpoint; `r0` / `teleport` are Columns over `nodes`.  Returns
+    (node, rank_micro)."""
+    ranks = nodes.select("node", r0.cast("long").alias("r"))
     for it in range(iterations):
         # shuffle_hash pins on the node-scale sides: the loop subplans
         # materialize under keyed_checkpoint's AQE-off scope, where the
@@ -201,11 +224,11 @@ def pagerank_integer(
         ).select(
             "node",
             (
-                F.lit(base)
+                teleport
                 + F.expr(f"{damping_milli} * coalesce(s, 0L) div 1000")
             ).cast("long").alias("r"),
         )
-        _probe(plan_probe, "pagerank_step", ranks)
+        _probe(plan_probe, tag, ranks)
         # checkpoint every OTHER round: lineage stays O(1) deep (2 rounds
         # of join+agg unroll fine through codegen) while the number of
         # eager materialization jobs — the fixed per-round cost — halves.
@@ -481,33 +504,73 @@ def ppr_integer(
             "outdeg", F.count(F.lit(1)).over(Window.partitionBy("src"))
         )
     )
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("b").isNotNull(), F.lit(init_micro))
-        .otherwise(0)
-        .cast("long")
-        .alias("r"),
+    r0 = F.when(F.col("b").isNotNull(), F.lit(init_micro)).otherwise(0)
+    return _rank_loop(
+        e, nodes, r0, F.coalesce(F.col("b"), F.lit(0)), iterations,
+        damping_milli, ck, "ppr_step", plan_probe,
     )
-    for it in range(iterations):
-        contrib = e.join(
-            ranks.hint("shuffle_hash"), e.src == ranks.node
-        ).select(F.col("dst"), F.expr("r div outdeg").alias("c"))
-        incoming = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-        ranks = (
-            nodes.join(
-                incoming.hint("shuffle_hash"),
-                nodes.node == incoming.dst,
-                "left",
-            )
-            .select(
+
+
+def bfs_levels(
+    und: DataFrame,
+    seed: DataFrame,
+    max_levels: int,
+    plan_probe: list | None = None,
+) -> DataFrame:
+    """Level-synchronous breadth-first search over an UNDIRECTED edge
+    list (src, dst — each edge present in both orientations) from the
+    one-column `seed` (node) table, for at most `max_levels` hops: each
+    level is frontier JOIN edges -> distinct -> anti-join visited, and
+    stops early on an empty frontier.  min-level semantics come for
+    free: a node enters `visited` only the first time it is seen.
+
+    `und` must already be materialized by the caller (it has a second
+    consumer: the seed derivation).  Returns (node, hops) for every
+    reached node, the seed at hops 0."""
+    from pyspark.sql import Observation
+
+    # PARTITION-PRESERVING on src (r16 opt, guide §2.4): every level's
+    # expansion joins the edge side on src, so the one-off repartition
+    # makes the edge leg of all levels exchange-free (a plain
+    # localCheckpoint re-enters the planner as UnknownPartitioning and
+    # re-exchanges und EVERY level).  The caller's plain checkpoint's
+    # AQE-coalesced count is the size-adaptive loop width; the keyed
+    # re-checkpoint pins hash(src) at exactly that count so every
+    # level's exchanges and the preserved partitioning agree.
+    parts = loop_partitions(und)
+    ck = partial(keyed_checkpoint, partitions=parts)
+    und = ck(und.repartition(parts, "src"))
+    visited = seed.withColumn("hops", F.lit(0)).localCheckpoint(eager=True)
+    frontier = visited.select("node")
+    for lvl in range(1, max_levels + 1):
+        # shuffle_hash pins on both node-scale sides (the r15 bug class,
+        # see pagerank's loop).  frontier is hash(node) from the previous
+        # level's distinct (preserved by keyed_checkpoint), und is
+        # hash(src): the expansion join is co-located and exchange-free;
+        # the distinct's node-keyed exchange is preserved into the
+        # anti-join and into the NEXT level's frontier.
+        # The empty-frontier probe rides the checkpoint job itself
+        # (Observation — the connected_components move) and `visited`
+        # stays a LAZY union of the materialized level pieces (a union's
+        # partitioning is not hash(node) even when its members' are, so
+        # an eager copy per level buys nothing): 1 job per level.
+        obs = Observation()
+        nxt = (
+            frontier.hint("shuffle_hash")
+            .join(und, frontier["node"] == und["src"])
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(
+                visited.select("node").hint("shuffle_hash"),
                 "node",
-                (
-                    F.coalesce(F.col("b"), F.lit(0))
-                    + F.expr(f"{damping_milli} * coalesce(s, 0L) div 1000")
-                ).cast("long").alias("r"),
+                "left_anti",
             )
+            .observe(obs, F.count(F.lit(1)).alias("n_new"))
         )
-        _probe(plan_probe, "ppr_step", ranks)
-        if it % 2 == 1 or it == iterations - 1:
-            ranks = ck(ranks)
-    return ranks.select("node", F.col("r").alias("rank_micro"))
+        _probe(plan_probe, "bfs_level", nxt)
+        nxt = ck(nxt)
+        if not obs.get["n_new"]:
+            break
+        visited = visited.unionByName(nxt.withColumn("hops", F.lit(lvl)))
+        frontier = nxt
+    return visited

@@ -76,17 +76,16 @@ def enrich_left_join(
     spine: DataFrame,
     sides: dict[str, tuple[DataFrame, list[str]]],
     keys: list[str],
-    broadcast_sides: bool = True,
 ) -> DataFrame:
     """J1 — successive left equi-joins of `spine` against each named side.
 
     sides: {name: (df, payload_cols)} — each side is pre-projected to
-    keys+payload (Q2 fix) and deduplicated is NOT applied (many-to-many
-    fan-out is intentional reference semantics, SURVEY.md Q3).
+    keys+payload (Q2 fix) and broadcast; deduplication is NOT applied
+    (many-to-many fan-out is intentional reference semantics, SURVEY.md
+    Q3).
     """
     def prep(side: DataFrame, payload: list[str]) -> DataFrame:
-        side = side.select(*keys, *payload)
-        return F.broadcast(side) if broadcast_sides else side
+        return F.broadcast(side.select(*keys, *payload))
 
     return reduce(
         lambda acc, item: acc.join(prep(*item[1]), on=keys, how="left"),

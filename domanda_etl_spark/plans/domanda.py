@@ -134,12 +134,6 @@ def clean_cola(df: DataFrame, now_epoch: float | None = None) -> DataFrame:
     return df
 
 
-# Structural one-evaluation barrier — now shared engine-wide from
-# operators.conform (r13: joins.normalize_join_keys stages its date-key
-# normalization through it too). Kept under the historical local name.
-_collapse_barrier = conform.one_eval_barrier
-
-
 def clean_supplier(df: DataFrame, raw_price: str, raw_tax: str, price_to: str, tax_to: str) -> DataFrame:
     """Supplier cleaning — reference set_transformer.py:13-26 and clones:
     rename -> flight-number canonicalize (F10) + row-validity filter (P4) ->
@@ -151,7 +145,7 @@ def clean_supplier(df: DataFrame, raw_price: str, raw_tax: str, price_to: str, t
         df = df.withColumns(
             {c: F.expr(S.canonical_flight_number_sql(qi(c))) for c in flight_cols}
         )
-        df = _collapse_barrier(df)
+        df = conform.one_eval_barrier(df)
         df = df.filter(F.expr(f"NOT ({S.invalid_flight_row_sql(flight_cols)})"))
     date_cols = {
         dcol: F.expr(S.date_to_mm_dd_slice_sql(qi(dcol)))
@@ -202,10 +196,6 @@ def attach_year(df: DataFrame) -> DataFrame:
             "返回日期": F.expr(S.attach_year_sql(qi("返回年份"), qi("返回日期"))),
         }
     ).drop("出發年份", "返回年份")
-
-
-def _maybe(df: DataFrame, name: str, expr) -> F.Column:
-    return expr(F.col(name)) if name in df.columns else F.lit(None).cast("string")
 
 
 def project_output(df: DataFrame) -> DataFrame:

@@ -29,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from domanda_etl_spark.operators.dedup import connected_components  # noqa: E402
 from domanda_etl_spark.operators.graph import (  # noqa: E402
+    bfs_levels,
     hits_integer,
     kcore,
     lpa_labels,
@@ -120,6 +121,23 @@ def test_kcore_loop_body_fully_keyed(spark):
     kcore(e, k=3, a="src", b="dst", plan_probe=probes)
     assert {t for t, _ in probes} >= {"kcore_peel", "kcore_prune"}
     _assert_loop_body_clean(probes)
+
+
+def test_bfs_level_body_fully_keyed(spark):
+    """One probe per BFS level; the level-1 body is frontier, distinct
+    and visited keyed exchanges only — 3 Exchange nodes (the level-0
+    frontier and visited are plain checkpoints, so both re-key once)."""
+    ed = _edges(spark)
+    und = ed.unionByName(ed.selectExpr("dst AS src", "src AS dst")).localCheckpoint(
+        eager=True
+    )
+    seed = spark.range(1).select(F.col("id").alias("node"))
+    probes = []
+    bfs_levels(und, seed, 2, plan_probe=probes)
+    assert [t for t, _ in probes] == ["bfs_level", "bfs_level"]
+    _assert_loop_body_clean(probes)
+    level1 = probes[0][1]
+    assert level1.count("Exchange") - level1.count("ReusedExchange") == 3
 
 
 def test_hits_scale_form_has_no_nodescale_single_partition(spark):

@@ -224,6 +224,25 @@ def test_pagerank_dangling_hand_computed(spark):
     assert two == {1: 150_000, 2: 277_500}
 
 
+def test_ppr_all_seeded_equals_pagerank(spark):
+    """With EVERY node seeded, personalized PageRank's teleport term is
+    pagerank's uniform one, so the two entry points must agree to the
+    integer on the ring+chords graph the plan gates use."""
+    from domanda_etl_spark.operators.graph import pagerank_integer, ppr_integer
+
+    n = 120
+    base = spark.range(n).select(F.col("id").alias("src"))
+    edges = None
+    for d in (1, 2, 7):
+        part = base.select("src", ((F.col("src") + d) % n).alias("dst"))
+        edges = part if edges is None else edges.unionByName(part)
+    seeds = spark.range(n).select(F.col("id").alias("node"))
+    pr = dict(map(tuple, pagerank_integer(edges, iterations=3).collect()))
+    ppr = dict(map(tuple, ppr_integer(edges, seeds, iterations=3).collect()))
+    assert len(pr) == n
+    assert ppr == pr
+
+
 def test_lsh_bucket_cap_drops_only_boilerplate_buckets(spark):
     """max_bucket_size guard: a boilerplate family larger than the cap
     (identical text -> all bands collide -> one B-member bucket per band)

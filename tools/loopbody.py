@@ -7,11 +7,9 @@ evidence is the per-round plan collected through the operators'
 `plan_probe` hook — the same hook tests/test_graph_plan_gates.py gates
 on.
 
-The graph operators run on the deterministic ring+chords graph the
-plan-gate tests use (plan SHAPE is input-independent: the same joins,
-aggregates and exchanges appear for any edge table); BFS has no
-operator-level hook, so its level body is reconstructed inline from the
-entry-file code on the real sf0.1 purchase graph and labeled as such.
+The operators run on the deterministic ring+chords graph the plan-gate
+tests use (plan SHAPE is input-independent: the same joins, aggregates
+and exchanges appear for any edge table).
 
 Usage: python tools/loopbody.py --round rNN <tag>
 """
@@ -28,6 +26,7 @@ from pyspark.sql import functions as F
 
 from domanda_etl_spark.operators.dedup import connected_components
 from domanda_etl_spark.operators.graph import (
+    bfs_levels,
     hits_integer,
     kcore,
     lpa_labels,
@@ -107,88 +106,11 @@ def main() -> None:
     connected_components(cc_e, plan_probe=probes)
     _dump(out, "connected_components", tag, probes)
 
-    # BFS level body, reconstructed from the entry-file loop on the real
-    # sf0.1 purchase graph (the entry function has no probe hook); the
-    # captured plan is level 1's `nxt` exactly as bfs_reachability_levels
-    # builds it.
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import __spark_entry__ as entrymod
-
-    orders = entrymod._t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = entrymod._t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        orders.join(li, orders["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (F.col("o_custkey") * 2).alias("c"),
-            (F.col("l_suppkey") * 2 + 1).alias("s"),
-        )
-        .distinct()
-    )
-    und_plain = (
-        edges.select(F.col("c").alias("src"), F.col("s").alias("dst"))
-        .unionByName(edges.select(F.col("s").alias("src"), F.col("c").alias("dst")))
-    )
-    try:
-        from domanda_etl_spark.operators.checkpoint import (
-            keyed_checkpoint,
-            loop_partitions,
-        )
-
-        und0 = und_plain.localCheckpoint(eager=True)
-        parts = loop_partitions(und0)
-        und = keyed_checkpoint(und0.repartition(parts, "src"), parts)
-        pinned = True
-    except ImportError:  # before-tree: no checkpoint module
-        und = und_plain.localCheckpoint(eager=True)
-        pinned = False
-    seed = (
-        und.filter(F.col("src") % 2 == 0)
-        .agg(F.min("src").alias("node"))
-        .filter(F.col("node").isNotNull())
-    )
-    visited = seed.withColumn("hops", F.lit(0)).localCheckpoint(eager=True)
-    frontier = visited.select("node")
-    if pinned:
-        nxt = (
-            frontier.hint("shuffle_hash")
-            .join(und, frontier["node"] == und["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(
-                visited.select("node").hint("shuffle_hash"),
-                "node",
-                "left_anti",
-            )
-        )
-        # the entry wraps this level in keyed_checkpoint(..., parts):
-        # plan it under the SAME conf scope (AQE off, loop width) so the
-        # captured plan is the one that actually materializes, without
-        # checkpoint-truncating the capture itself
-        _aqe = spark.conf.get("spark.sql.adaptive.enabled")
-        _shuf = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-        try:
-            plan_txt = nxt._jdf.queryExecution().executedPlan().toString()
-        finally:
-            spark.conf.set("spark.sql.adaptive.enabled", _aqe)
-            spark.conf.set("spark.sql.shuffle.partitions", _shuf)
-        _dump(out, "bfs_level", tag, [("bfs_level1_nxt", plan_txt)])
-        spark.stop()
-        return
-    else:
-        nxt = (
-            frontier.join(und, frontier["node"] == und["src"])
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(visited.select("node"), "node", "left_anti")
-        )
-    _dump(
-        out,
-        "bfs_level",
-        tag,
-        [("bfs_level1_nxt", nxt._jdf.queryExecution().executedPlan().toString())],
-    )
+    probes = []
+    und = e2.selectExpr("a AS src", "b AS dst").localCheckpoint(eager=True)
+    seed = spark.range(1).select(F.col("id").alias("node"))
+    bfs_levels(und, seed, 1, plan_probe=probes)
+    _dump(out, "bfs_level", tag, probes)
 
     spark.stop()
 
