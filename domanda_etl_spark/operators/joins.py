@@ -52,10 +52,9 @@ def normalize_join_keys(
     dates = set(date_keys or [])
     out = {}
     for k in keys:
-        # SQL-string twins: ONE py4j call per key instead of ~30 (the
-        # Column builders cross py4j per expression node; at 84 keys per
-        # pipeline build the difference is ~2 s of pure plan construction).
-        # Twin/Column equivalence is asserted in tests/test_scalars.py.
+        # SQL text: ONE py4j call per key instead of ~30 (the Column API
+        # crosses py4j per expression node; at 84 keys per pipeline build
+        # that is ~2 s of pure plan construction, PERF.md round 7).
         sql = scalars.normalize_join_key_sql(k, strip_all_whitespace=k in strip_ws)
         out[k] = F.expr(sql)
     df = df.withColumns(out)

@@ -97,9 +97,8 @@ def clean_cola(df: DataFrame, now_epoch: float | None = None) -> DataFrame:
     derivation from leg-1 departure time (F6/F7/F8) -> ensure join keys ->
     metadata defaults (建立時間/KP; clock injected for determinism, Q4).
     """
-    # SQL-string twins throughout (one py4j call per column instead of one
-    # per expression node — see scalars.py twin section; equivalence is
-    # gate-tested in tests/test_scalars.py).
+    # SQL text throughout: one py4j call per column instead of one per
+    # expression node (PERF.md round 7; see the scalars.py docstring).
     qi = S._sql_ident
     df = conform.rename_existing(df, _cola_rename())
     df = df.withColumns(
@@ -203,15 +202,14 @@ def project_output(df: DataFrame) -> DataFrame:
     unified_transformer.py:290-503), as ONE selectExpr of pre-composed SQL
     strings: one py4j call carries the whole projection instead of one per
     expression node (~1 s of pure plan-construction latency at this
-    breadth). Twin/builder equivalence is gate-tested in
-    tests/test_scalars.py; the full-pipeline DuckDB hash covers the
+    breadth, PERF.md round 7). The full-pipeline DuckDB hash covers the
     composition on real data."""
     qi = S._sql_ident
     cols = set(df.columns)
     ident = lambda x: x  # noqa: E731
 
-    def maybe(name: str, twin) -> str:
-        return twin(qi(name)) if name in cols else "CAST(NULL AS STRING)"
+    def maybe(name: str, sql_fn) -> str:
+        return sql_fn(qi(name)) if name in cols else "CAST(NULL AS STRING)"
 
     out: dict[str, str] = {}
     for i in LEGS:

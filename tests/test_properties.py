@@ -22,33 +22,35 @@ TEXTISH = st.text(
 )
 
 
-def _batch_apply(spark, values, expr_builder):
+def _batch_apply(spark, values, sql):
     df = spark.createDataFrame([(v,) for v in values], "v string")
-    return [r["o"] for r in df.select(expr_builder("v").alias("o")).collect()]
+    return [r["o"] for r in df.select(F.expr(sql).alias("o")).collect()]
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(TEXTISH, min_size=1, max_size=24))
 def test_flight_canonicalization_idempotent(spark, vals):
-    once = _batch_apply(spark, vals, S.canonical_flight_number)
-    twice = _batch_apply(spark, once, S.canonical_flight_number)
+    sql = S.canonical_flight_number_sql("`v`")
+    once = _batch_apply(spark, vals, sql)
+    twice = _batch_apply(spark, once, sql)
     assert once == twice
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(TEXTISH, min_size=1, max_size=24))
 def test_join_date_normalize_idempotent(spark, vals):
-    once = _batch_apply(spark, vals, S.normalize_join_date)
-    twice = _batch_apply(spark, once, S.normalize_join_date)
+    sql = S.normalize_join_date_sql("`v`")
+    once = _batch_apply(spark, vals, sql)
+    twice = _batch_apply(spark, once, sql)
     assert once == twice
 
 
 @settings(max_examples=12, deadline=None, suppress_health_check=list(HealthCheck))
 @given(st.lists(TEXTISH, min_size=1, max_size=24))
 def test_join_key_normalize_idempotent(spark, vals):
-    build = lambda c: S.normalize_join_key(c, strip_all_whitespace=True)  # noqa: E731
-    once = _batch_apply(spark, vals, build)
-    twice = _batch_apply(spark, once, build)
+    sql = S.normalize_join_key_sql("v", strip_all_whitespace=True)
+    once = _batch_apply(spark, vals, sql)
+    twice = _batch_apply(spark, once, sql)
     assert once == twice
 
 

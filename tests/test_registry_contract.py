@@ -95,22 +95,27 @@ def test_freeze_hash_sees_package_helper_edits(tmp_path, monkeypatch):
 
     from tools import backlog as B
 
-    before = {
-        n: B.source_hash(n)
-        for n in (
-            "label_propagation_communities",  # lpa_labels lives in graph.py
-            "pagerank_purchases",             # pagerank_integer too
-            "dedup_cluster_assignment",       # connected_components (dedup.py)
-            "group_agg_pricing_summary",      # no graph/dedup dependency
-        )
-    }
+    names = (
+        "label_propagation_communities",  # lpa_labels lives in graph.py
+        "pagerank_purchases",             # pagerank_integer too
+        "dedup_cluster_assignment",       # connected_components (dedup.py)
+        "group_agg_pricing_summary",      # no graph/dedup dependency
+        "scalar_luggage",                 # F4/F5 SQL forms (scalars.py)
+        "similarity_topk_bruteforce",     # functions/vectors.py, not scalars.py
+        "versioned_sink_roundtrip",       # sinks/versioned.py
+    )
+    before = {n: B.source_hash(n) for n in names}
     pkg_copy = tmp_path / "domanda_etl_spark"
     shutil.copytree(B.PKG_ROOT, pkg_copy)
-    graph = pkg_copy / "operators" / "graph.py"
-    graph.write_text(graph.read_text() + "\n# post-freeze re-plan\n")
     monkeypatch.setattr(B, "PKG_ROOT", str(pkg_copy))
-    after = {n: B.source_hash(n) for n in before}
 
+    def edit(rel: str) -> dict[str, str]:
+        mod = pkg_copy / rel
+        mod.write_text(mod.read_text() + "\n# post-freeze re-plan\n")
+        B._file_hash.cache_clear()  # path unchanged, content changed
+        return {n: B.source_hash(n) for n in names}
+
+    after = edit("operators/graph.py")
     assert after["label_propagation_communities"] != before["label_propagation_communities"]
     assert after["pagerank_purchases"] != before["pagerank_purchases"]
     # not a graph.py dependent: connected_components is operators/dedup.py
@@ -118,9 +123,19 @@ def test_freeze_hash_sees_package_helper_edits(tmp_path, monkeypatch):
     assert after["group_agg_pricing_summary"] == before["group_agg_pricing_summary"]
 
     # and a dedup.py edit drifts the CC-based query but not the others
-    dedup_mod = pkg_copy / "operators" / "dedup.py"
-    dedup_mod.write_text(dedup_mod.read_text() + "\n# post-freeze re-plan\n")
-    B._file_hash.cache_clear()  # path unchanged, content changed
-    third = {n: B.source_hash(n) for n in before}
+    third = edit("operators/dedup.py")
     assert third["dedup_cluster_assignment"] != before["dedup_cluster_assignment"]
     assert third["group_agg_pricing_summary"] == before["group_agg_pricing_summary"]
+
+    # a package __init__ that re-exports its submodules would widen every
+    # stamp to the whole package: a scalars.py edit must drift only its
+    # consumers, a sink edit only the queries that reach the sink
+    fourth = edit("functions/scalars.py")
+    assert fourth["scalar_luggage"] != third["scalar_luggage"]
+    assert fourth["similarity_topk_bruteforce"] == third["similarity_topk_bruteforce"]
+    assert fourth["dedup_cluster_assignment"] == third["dedup_cluster_assignment"]
+
+    fifth = edit("sinks/versioned.py")
+    assert fifth["versioned_sink_roundtrip"] != fourth["versioned_sink_roundtrip"]
+    for n in ("group_agg_pricing_summary", "pagerank_purchases", "dedup_cluster_assignment"):
+        assert fifth[n] == fourth[n], n

@@ -58,3 +58,34 @@ def test_no_row_at_a_time_udfs_in_library():
     # mapInPandas / applyInPandasWithState (Arrow-batched) are the sanctioned
     # Python escape hatches; F.udf / @udf row-at-a-time is banned
     assert _occurrences(r"F\.udf\(|@udf\b|functions\.udf\(") == {}
+
+
+def test_no_module_level_rebinding_in_entry():
+    # a second top-level binding silently replaces the first for every
+    # later reader, and tools/backlog.py hashes the LAST binding of a name
+    # into the freeze stamps of queries that used the first
+    import ast
+    from collections import Counter
+
+    entry = os.path.join(os.path.dirname(PKG), "__spark_entry__.py")
+    with open(entry) as fh:
+        tree = ast.parse(fh.read())
+    bound = Counter()
+
+    def bind(t: ast.expr) -> None:  # names, not subscripts or attributes
+        if isinstance(t, ast.Name):
+            bound[t.id] += 1
+        elif isinstance(t, (ast.Tuple, ast.List)):
+            for e in t.elts:
+                bind(e)
+        elif isinstance(t, ast.Starred):
+            bind(t.value)
+
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            bound[node.name] += 1
+        elif isinstance(node, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+            for t in node.targets if isinstance(node, ast.Assign) else [node.target]:
+                bind(t)
+    twice = sorted(n for n, c in bound.items() if c > 1)
+    assert not twice, f"module-level names bound more than once in __spark_entry__.py: {twice}"
