@@ -29,17 +29,6 @@ def distinct_rows(df: DataFrame) -> DataFrame:
     return df.distinct()
 
 
-def first_per_key(df: DataFrame, key: str, id_col: str) -> DataFrame:
-    """Exact dedup: keep min(id) per duplicate-key group — a groupBy (not a
-    window) so the partial aggregation halves shuffle volume."""
-    return df.groupBy(key).agg(F.min(id_col).alias(id_col))
-
-
-def shingle_docs(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
-    """(id, shingle) pairs — distinct k-char shingles per doc."""
-    return df.select(id_col, F.explode(T.char_shingles(text_col, k)).alias("shingle"))
-
-
 def minhash_signatures(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 8
 ) -> DataFrame:

@@ -1,4 +1,4 @@
-from .bucketed import read_table, write_bucketed
+from .bucketed import write_bucketed
 from .jdbc import read_jdbc, write_jdbc
 from .versioned import PartitionedVersionedTable, VersionedTable, write_csv
 
@@ -6,7 +6,6 @@ __all__ = [
     "PartitionedVersionedTable",
     "VersionedTable",
     "read_jdbc",
-    "read_table",
     "write_bucketed",
     "write_csv",
     "write_jdbc",

@@ -19,7 +19,7 @@ carry tiny files).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_bucketed(
@@ -39,7 +39,3 @@ def write_bucketed(
     if sort:
         w = w.sortBy(key)
     w.saveAsTable(table)
-
-
-def read_table(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

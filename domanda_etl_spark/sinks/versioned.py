@@ -1,15 +1,21 @@
-"""Versioned parquet sink — the reference's sink surface (S4-S9,
+"""Versioned parquet sinks — the reference's sink surface (S4-S9,
 SURVEY.md §2.1) re-expressed as table versions instead of SQL snapshots.
 
 The reference hand-rolls atomicity against Postgres: CTAS backup ->
 TRUNCATE -> row-wise INSERT -> verification read -> restore-from-backup on
-failure, keep newest 3 backups (reference etl/loader.py:159-348). With a
-versioned table all of that collapses into: every write lands in a fresh
-`_v{n}` directory, a manifest pointer flips atomically (os.replace) only
-after the write fully succeeds, `restore` is a pointer flip to an older
-version, and retention vacuums old directories. Delta Lake provides exactly
-this on a real lake; this implementation is dependency-free (Delta is not
+failure, keep newest 3 backups (reference etl/loader.py:159-348). Here all
+of that is ONE manifest log, `_VersionLog`, shared by both sinks: every
+write lands in a fresh `_s{n}` segment directory, and a version is a
+manifest entry naming the segments it reads. The manifest is replaced
+atomically (os.replace) only after the write fully succeeds, `restore` is
+a verified pointer flip to an older entry, and retention vacuums the
+segments no retained entry references. Delta Lake provides exactly this
+on a real lake; this implementation is dependency-free (Delta is not
 installed here) with the same operator surface.
+
+The two sinks differ only in the file set a version entry holds:
+`VersionedTable` lists segments (`segments`), `PartitionedVersionedTable`
+maps partition value -> segments (`parts`, plus the version's schema).
 
 Single-writer semantics (matching the reference's advisory-lock discipline,
 etl/loader.py:169-174).
@@ -27,8 +33,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-class VersionedTable:
+class _VersionLog:
+    """The manifest log: commit, history, restore and retention over
+    `_s{n}` segment directories. A subclass names its version entry's
+    file-set key (`_FILESET`), lists the segment ids an entry references
+    (`_segments`), and provides `read(spark, version)`."""
+
     MAX_VERSIONS = 3  # reference MAX_BACKUPS = 3 (etl/loader.py:324)
+    _FILESET: str
 
     def __init__(self, path: str, max_versions: int | None = None):
         self.path = path
@@ -45,15 +57,16 @@ class VersionedTable:
             return {"current": None, "next_id": 0, "next_seg": 0, "versions": []}
         with open(self._manifest_path) as f:
             m = json.load(f)
-        legacy = [e["id"] for e in m.get("versions", []) if "segments" not in e]
+        legacy = [e["id"] for e in m.get("versions", []) if self._FILESET not in e]
         if legacy:
-            # pre-segment-manifest layout (per-version _v{N} dirs): refuse
-            # loudly instead of failing with a bare KeyError deep in read()
+            # the pre-segment per-version layout (_v{N} dirs), or the other
+            # sink's manifest: refuse loudly instead of a bare KeyError
+            # deep in read()
             raise ValueError(
                 f"{self.path}: manifest versions {legacy} use the legacy "
-                "per-version layout (no 'segments' list). Re-materialize the "
-                "table by reading the _v{N} parquet directly and overwrite() "
-                "into a fresh VersionedTable."
+                f"per-version layout or another sink's (no '{self._FILESET}'). "
+                "Re-materialize the table by reading its parquet directly and "
+                f"overwrite() into a fresh {type(self).__name__}."
             )
         return m
 
@@ -69,33 +82,93 @@ class VersionedTable:
     def _sdir(self, segment: int) -> str:
         return os.path.join(self.path, f"_s{segment}")
 
-    def _version_entry(self, m: dict, version: int) -> dict:
+    def _entry(self, m: dict, version: int | None = None) -> dict:
+        """The manifest entry of `version` (default: current)."""
+        v = m["current"] if version is None else version
+        if v is None:
+            raise FileNotFoundError(f"{self.path}: empty table")
         for e in m["versions"]:
-            if e["id"] == version:
+            if e["id"] == v:
                 return e
-        raise FileNotFoundError(f"{self.path}: version {version} vacuumed or unknown")
+        raise FileNotFoundError(f"{self.path}: version {v} vacuumed or unknown")
 
-    def _commit_version(self, m: dict, op: str, segments: list[int]) -> int:
+    def _commit(self, m: dict, op: str, **fileset) -> int:
+        """Publish one version: append its entry, flip the pointer, then
+        vacuum (write -> pointer flip -> vacuum)."""
         v = m["next_id"]
-        m["versions"].append(
-            {"id": v, "ts": time.time(), "op": op, "segments": segments}
-        )
+        m["versions"].append({"id": v, "ts": time.time(), "op": op, **fileset})
         m["current"] = v
         m["next_id"] = v + 1
         self._write_manifest(m)
-        self._cleanup_old_versions()
+        self._vacuum(m)
         return v
 
+    # ---------------- history / restore / retention ----------------------
+    def history(self) -> list[dict]:
+        """S6/DESCRIBE HISTORY — retained versions, newest first."""
+        return sorted(self._read_manifest()["versions"], key=lambda e: -e["id"])
+
+    def restore(self, spark: SparkSession, version: int | None = None) -> int:
+        """S7 restore-from-backup: flip the pointer to `version` (default:
+        newest version before current — the reference's 'latest backup').
+        Verifies the restored version is readable and row-counted, the
+        reference's count check (etl/loader.py:290-298)."""
+        m = self._read_manifest()
+        if version is None:
+            older = [e["id"] for e in m["versions"] if e["id"] < (m["current"] or 0)]
+            if not older:
+                raise FileNotFoundError(f"{self.path}: no prior version to restore")
+            version = max(older)
+        self._entry(m, version)  # raises if vacuumed
+        # verification read BEFORE the pointer flip (S7) — a plain
+        # statement, not an assert, so `python -O` cannot strip the read
+        self.read(spark, version).count()
+        m["current"] = version
+        self._write_manifest(m)
+        return version
+
+    def _vacuum(self, m: dict) -> None:
+        """S8 retention: keep the newest `max_versions` versions (and never
+        drop current); vacuum segment directories no retained version
+        references (a segment shared by a retained and a dropped version
+        survives — this is what makes O(delta) appends safe to vacuum)."""
+        keep = {e["id"] for e in sorted(m["versions"], key=lambda e: -e["id"])[: self.max_versions]}
+        keep.add(m["current"])
+        dropped = [e for e in m["versions"] if e["id"] not in keep]
+        if not dropped:
+            return
+        kept_entries = [e for e in m["versions"] if e["id"] in keep]
+        referenced = {s for e in kept_entries for s in self._segments(e)}
+        for e in dropped:
+            for s in self._segments(e):
+                if s not in referenced:
+                    shutil.rmtree(self._sdir(s), ignore_errors=True)
+        m["versions"] = kept_entries
+        self._write_manifest(m)
+
+
+class VersionedTable(_VersionLog):
+    """Each version entry lists the segments its rows live in."""
+
+    _FILESET = "segments"
+
+    @staticmethod
+    def _segments(entry: dict) -> list[int]:
+        return entry["segments"]
+
     # ---------------- write paths ----------------------------------------
+    def _write_segment(self, df: DataFrame, m: dict) -> int:
+        seg = m.get("next_seg", 0)
+        df.write.mode("overwrite").parquet(self._sdir(seg))
+        m["next_seg"] = seg + 1
+        return seg
+
     def overwrite(self, df: DataFrame) -> int:
         """S5 truncate-and-load: full refresh as a new version. On ANY write
         failure the pointer never moves — the reference's restore-on-failure
         path (etl/loader.py:233-238) is unnecessary by construction."""
         m = self._read_manifest()
-        seg = m.get("next_seg", 0)
-        df.write.mode("overwrite").parquet(self._sdir(seg))
-        m["next_seg"] = seg + 1
-        return self._commit_version(m, "overwrite", [seg])
+        return self._commit(m, "overwrite", segments=[self._write_segment(df, m)])
 
     def append(self, df: DataFrame) -> int:
         """S4 batch insert, O(delta) not O(table): ONLY the appended rows are
@@ -104,29 +177,24 @@ class VersionedTable:
         Delta-style copy-on-write at the FILE-SET level, so appending N rows
         to a 100 TB table costs N rows of IO, not a full rewrite."""
         m = self._read_manifest()
-        seg = m.get("next_seg", 0)
-        df.write.mode("overwrite").parquet(self._sdir(seg))
-        m["next_seg"] = seg + 1
-        prev_segments: list[int] = []
-        if m["current"] is not None:
-            prev_segments = list(self._version_entry(m, m["current"])["segments"])
-        return self._commit_version(m, "append", prev_segments + [seg])
+        seg = self._write_segment(df, m)
+        prev = [] if m["current"] is None else self._entry(m)["segments"]
+        return self._commit(m, "append", segments=[*prev, seg])
 
     def compact(self, spark: SparkSession, target_partitions: int | None = None) -> int:
         """OPTIMIZE / small-file compaction: after many O(delta) appends the
         current version references many small segments; rewrite it into one
         bin-packed segment and publish as a new version. Older versions keep
         referencing the original segments (time travel intact) until
-        retention vacuums them. At 100 TB this runs per-partition on a
-        write_partitioned layout, not table-wide."""
+        retention vacuums them. This rewrite is table-wide, O(table);
+        PartitionedVersionedTable has no compact because its merge_upsert
+        and delete_keys already leave each partition they touch in one
+        segment."""
         df = self.read(spark)
         if target_partitions is not None:
             df = df.coalesce(target_partitions)
         m = self._read_manifest()
-        seg = m.get("next_seg", 0)
-        df.write.mode("overwrite").parquet(self._sdir(seg))
-        m["next_seg"] = seg + 1
-        return self._commit_version(m, "compact", [seg])
+        return self._commit(m, "compact", segments=[self._write_segment(df, m)])
 
     def merge_upsert(
         self, spark: SparkSession, updates: DataFrame, keys: list[str]
@@ -137,10 +205,10 @@ class VersionedTable:
         else is carried over. Publishes ONE new version atomically.
 
         Scale note: parquet copy-on-write makes a full-table merge O(table)
-        — inherent without deletion vectors. At 100 TB you restrict the
-        rewrite to affected partitions (write_partitioned layout + a
-        partition-pruned read) or use a format with merge-on-read. The
-        operator surface here is the same either way."""
+        — inherent without deletion vectors. At 100 TB use
+        PartitionedVersionedTable.merge_upsert, which rewrites only the
+        affected partitions, or a format with merge-on-read. The operator
+        surface is the same either way."""
         try:
             current = self.read(spark)
         except FileNotFoundError:
@@ -160,64 +228,15 @@ class VersionedTable:
         survivors = self.read(spark).filter(~condition)
         return self.overwrite(survivors)
 
-    # ---------------- read / history / restore ---------------------------
+    # ---------------- read / verification --------------------------------
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        m = self._read_manifest()
-        v = m["current"] if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"{self.path}: empty table")
-        segments = self._version_entry(m, v)["segments"]
+        segments = self._entry(self._read_manifest(), version)["segments"]
         # mergeSchema: appended segments may carry evolved schemas (the old
         # unionByName(allowMissingColumns=True) semantics, now at scan time)
         return spark.read.option("mergeSchema", "true").parquet(
             *[self._sdir(s) for s in segments]
         )
 
-    def history(self) -> list[dict]:
-        """S6/DESCRIBE HISTORY — retained versions, newest first."""
-        return sorted(self._read_manifest()["versions"], key=lambda e: -e["id"])
-
-    def restore(self, spark: SparkSession, version: int | None = None) -> int:
-        """S7 restore-from-backup: flip the pointer to `version` (default:
-        newest version before current — the reference's 'latest backup').
-        Verifies the restored version is readable and row-counted, the
-        reference's count check (etl/loader.py:290-298)."""
-        m = self._read_manifest()
-        if version is None:
-            older = [e["id"] for e in m["versions"] if e["id"] < (m["current"] or 0)]
-            if not older:
-                raise FileNotFoundError(f"{self.path}: no prior version to restore")
-            version = max(older)
-        self._version_entry(m, version)  # raises if vacuumed
-        # verification read BEFORE the pointer flip (S7) — a plain
-        # statement, not an assert, so `python -O` cannot strip the read
-        self.read(spark, version).count()
-        m["current"] = version
-        self._write_manifest(m)
-        return version
-
-    def _cleanup_old_versions(self) -> None:
-        """S8 retention: keep the newest `max_versions` versions (and never
-        drop current); vacuum segment directories no retained version
-        references (a segment shared by a retained and a dropped version
-        survives — this is what makes O(delta) appends safe to vacuum)."""
-        m = self._read_manifest()
-        keep = {e["id"] for e in sorted(m["versions"], key=lambda e: -e["id"])[: self.max_versions]}
-        if m["current"] is not None:
-            keep.add(m["current"])
-        dropped = [e for e in m["versions"] if e["id"] not in keep]
-        if not dropped:
-            return
-        kept_entries = [e for e in m["versions"] if e["id"] in keep]
-        referenced = {s for e in kept_entries for s in e["segments"]}
-        for e in dropped:
-            for s in e["segments"]:
-                if s not in referenced:
-                    shutil.rmtree(self._sdir(s), ignore_errors=True)
-        m["versions"] = kept_entries
-        self._write_manifest(m)
-
-    # ---------------- verification ---------------------------------------
     def verify_write(self, spark: SparkSession, predicates: dict[str, object]) -> bool:
         """S9 post-write verification read: point query on equality
         predicates, >= 1 row expected (reference etl/loader.py:68-89)."""
@@ -228,7 +247,7 @@ class VersionedTable:
         return df.filter(cond).limit(1).count() > 0
 
 
-class PartitionedVersionedTable:
+class PartitionedVersionedTable(_VersionLog):
     """VersionedTable with PARTITION-LEVEL copy-on-write — the shape that
     makes MERGE O(affected partitions) instead of O(table) at 100 TB.
 
@@ -246,33 +265,15 @@ class PartitionedVersionedTable:
     without type inference) — cast on read if a typed column is needed.
     """
 
+    _FILESET = "parts"
+
     def __init__(self, path: str, partition_col: str, max_versions: int | None = None):
-        self.path = path
+        super().__init__(path, max_versions)
         self.partition_col = partition_col
-        self.max_versions = max_versions or VersionedTable.MAX_VERSIONS
-        os.makedirs(path, exist_ok=True)
 
-    # -- manifest ----------------------------------------------------------
-    @property
-    def _manifest_path(self) -> str:
-        return os.path.join(self.path, "_manifest.json")
-
-    def _read_manifest(self) -> dict:
-        if not os.path.exists(self._manifest_path):
-            return {"current": None, "next_id": 0, "next_seg": 0, "versions": []}
-        with open(self._manifest_path) as f:
-            return json.load(f)
-
-    _write_manifest = VersionedTable._write_manifest
-
-    def _sdir(self, segment: int) -> str:
-        return os.path.join(self.path, f"_s{segment}")
-
-    def _entry(self, m: dict, version: int) -> dict:
-        for e in m["versions"]:
-            if e["id"] == version:
-                return e
-        raise FileNotFoundError(f"{self.path}: version {version} vacuumed or unknown")
+    @staticmethod
+    def _segments(entry: dict) -> list[int]:
+        return [s for segs in entry["parts"].values() for s in segs]
 
     # -- write paths -------------------------------------------------------
     def _write_segment(self, df: DataFrame, m: dict) -> tuple[int, list[str]]:
@@ -282,7 +283,12 @@ class PartitionedVersionedTable:
         )
         # persist the table schema in the manifest (Delta-log style) so a
         # version with ZERO partitions — every row deleted, or an empty
-        # load — still reads back as a TYPED empty frame (r12 audit)
+        # load — still reads back as a TYPED empty frame (r12 audit). Each
+        # commit pins m["schema"] into its entry, so every version records
+        # the schema in force when it was published — merge_upsert with
+        # allowMissingColumns=True may evolve it between versions, and
+        # read(version=old) must type its empty-frame path with THAT
+        # version's schema, not the latest write's (ADVICE r12)
         m["schema"] = df.schema.json()
         m["next_seg"] = seg + 1
         prefix = f"{self.partition_col}="
@@ -293,27 +299,12 @@ class PartitionedVersionedTable:
         ]
         return seg, parts
 
-    def _commit(self, m: dict, op: str, parts: dict[str, list[int]]) -> int:
-        v = m["next_id"]
-        # schema is pinned PER VERSION (Delta-log style): m["schema"] holds
-        # the latest write's schema at commit time, so each entry records
-        # the schema in force when it was published — merge_upsert with
-        # allowMissingColumns=True may evolve it between versions, and
-        # read(version=old) must type its empty-frame path with THAT
-        # version's schema, not the latest write's (ADVICE r12)
-        m["versions"].append(
-            {"id": v, "ts": time.time(), "op": op, "parts": parts, "schema": m.get("schema")}
-        )
-        m["current"] = v
-        m["next_id"] = v + 1
-        self._write_manifest(m)
-        self._vacuum()
-        return v
-
     def overwrite(self, df: DataFrame) -> int:
         m = self._read_manifest()
         seg, parts = self._write_segment(df, m)
-        return self._commit(m, "overwrite", {p: [seg] for p in parts})
+        return self._commit(
+            m, "overwrite", parts={p: [seg] for p in parts}, schema=m.get("schema")
+        )
 
     def append(self, df: DataFrame) -> int:
         """O(delta): writes only the new rows; partitions absent from the
@@ -322,16 +313,40 @@ class PartitionedVersionedTable:
         seg, parts = self._write_segment(df, m)
         merged: dict[str, list[int]] = {}
         if m["current"] is not None:
-            merged = {k: list(v) for k, v in self._entry(m, m["current"])["parts"].items()}
+            merged = {k: list(v) for k, v in self._entry(m)["parts"].items()}
         for p in parts:
             merged.setdefault(p, []).append(seg)
-        return self._commit(m, "append", merged)
+        return self._commit(m, "append", parts=merged, schema=m.get("schema"))
+
+    def _touched(
+        self, spark: SparkSession, m: dict, feed: DataFrame
+    ) -> tuple[DataFrame, dict[str, list[int]], DataFrame | None]:
+        """The prologue merge_upsert and delete_keys share. Returns the
+        feed pinned to ONE evaluation, the current version's references
+        for the partitions the feed does not name (carried over with zero
+        IO), and the current rows of the partitions it does name (None
+        when the current version holds none of them).
+
+        The pin matters because the feed may be nondeterministic
+        (dropDuplicates, sample, shuffle-order-dependent picks) and is read
+        more than once — the partition collect, the anti-join, and for a
+        merge the written union. Unpinned, those reads can see DIFFERENT
+        rows and commit an inconsistent version (e.g. retiring a key in one
+        partition while writing it into another). localCheckpoint is
+        O(delta), which both callers already are. The partition list is a
+        bounded collect (distinct partition values of the feed —
+        partition-count scale, never row scale)."""
+        prev = self._entry(m)["parts"]
+        feed = feed.localCheckpoint(eager=True)
+        pc = self.partition_col
+        named = {str(r[pc]) for r in feed.select(F.col(pc).cast("string")).distinct().collect()}
+        carried = {k: list(v) for k, v in prev.items() if k not in named}
+        touched = {p: prev[p] for p in named if p in prev}
+        return feed, carried, self._read_parts(spark, touched) if touched else None
 
     def merge_upsert(self, spark: SparkSession, updates: DataFrame, keys: list[str]) -> int:
-        """MERGE that rewrites ONLY the partitions present in `updates`.
-        The affected-partition list is a bounded collect (distinct
-        partition values of the delta — partition-count scale, never row
-        scale). Untouched partitions: zero IO, references carried over.
+        """MERGE that rewrites ONLY the partitions present in `updates`;
+        untouched partitions: zero IO, references carried over.
 
         CONTRACT — merge identity is `keys` WITHIN a partition: the
         anti-join that retires old rows runs only over the partitions the
@@ -348,32 +363,15 @@ class PartitionedVersionedTable:
         m = self._read_manifest()
         if m["current"] is None:
             return self.overwrite(updates)
-        # Pin the delta to ONE evaluation: `updates` may be nondeterministic
-        # (dropDuplicates, sample, shuffle-order-dependent picks), and this
-        # method reads it three times — the affected-partition collect, the
-        # anti-join, and the written union. Without materialization those
-        # three reads can see DIFFERENT rows, committing an inconsistent
-        # version (e.g. retiring a key in one partition while writing it
-        # into another). localCheckpoint is O(delta), which merge already is.
-        updates = updates.localCheckpoint(eager=True)
-        pc = self.partition_col
-        affected = [
-            str(r[pc])
-            for r in updates.select(F.col(pc).cast("string")).distinct().collect()
-        ]
-        prev = self._entry(m, m["current"])["parts"]
-        touched = [p for p in affected if p in prev]
-        if touched:
-            current_slice = self._read_parts(spark, {p: prev[p] for p in touched})
+        updates, new_parts, current_slice = self._touched(spark, m, updates)
+        merged_rows = updates
+        if current_slice is not None:
             kept = current_slice.join(updates.select(*keys).distinct(), keys, "left_anti")
             merged_rows = kept.unionByName(updates, allowMissingColumns=True)
-        else:
-            merged_rows = updates
         seg, written_parts = self._write_segment(merged_rows, m)
-        new_parts = {k: list(v) for k, v in prev.items() if k not in set(affected)}
         for p in written_parts:
             new_parts[p] = [seg]
-        return self._commit(m, "merge", new_parts)
+        return self._commit(m, "merge", parts=new_parts, schema=m.get("schema"))
 
     def delete_keys(self, spark: SparkSession, deletes: DataFrame, keys: list[str]) -> int:
         """Targeted deletion (GDPR / right-to-be-forgotten) with
@@ -392,21 +390,9 @@ class PartitionedVersionedTable:
         vacuums them; tighten `max_versions` when deletion must become
         durable."""
         m = self._read_manifest()
-        if m["current"] is None:
-            raise FileNotFoundError(f"{self.path}: empty table")
-        # same single-evaluation pinning as merge_upsert: the partition
-        # collect and the anti-join must see identical delete rows
-        deletes = deletes.localCheckpoint(eager=True)
-        pc = self.partition_col
-        affected = [
-            str(r[pc])
-            for r in deletes.select(F.col(pc).cast("string")).distinct().collect()
-        ]
-        prev = self._entry(m, m["current"])["parts"]
-        touched = [p for p in affected if p in prev]
-        new_parts = {k: list(v) for k, v in prev.items() if k not in set(touched)}
-        if touched:
-            current_slice = self._read_parts(spark, {p: prev[p] for p in touched})
+        deletes, new_parts, current_slice = self._touched(spark, m, deletes)
+        if current_slice is not None:
+            pc = self.partition_col
             join_cols = list(keys) if pc in keys else [*keys, pc]
             pairs = deletes.select(
                 *[F.col(k) for k in keys if k != pc],
@@ -416,9 +402,9 @@ class PartitionedVersionedTable:
             seg, written_parts = self._write_segment(kept, m)
             for p in written_parts:
                 new_parts[p] = [seg]
-        return self._commit(m, "delete", new_parts)
+        return self._commit(m, "delete", parts=new_parts, schema=m.get("schema"))
 
-    # -- read / restore ----------------------------------------------------
+    # -- read ------------------------------------------------------------
     def _read_parts(self, spark: SparkSession, parts: dict[str, list[int]]) -> DataFrame:
         pc = self.partition_col
         out: DataFrame | None = None
@@ -453,10 +439,7 @@ class PartitionedVersionedTable:
         for pre-r13 manifests. FileNotFoundError is reserved for a table
         with no versions at all or a vacuumed/unknown version id."""
         m = self._read_manifest()
-        v = m["current"] if version is None else version
-        if v is None:
-            raise FileNotFoundError(f"{self.path}: empty table")
-        entry = self._entry(m, v)
+        entry = self._entry(m, version)
         parts = entry["parts"]
         if partitions is not None:
             parts = {p: parts[p] for p in partitions if p in parts}
@@ -478,41 +461,6 @@ class PartitionedVersionedTable:
             )
             return spark.createDataFrame([], schema)
         return self._read_parts(spark, parts)
-
-    def history(self) -> list[dict]:
-        return sorted(self._read_manifest()["versions"], key=lambda e: -e["id"])
-
-    def restore(self, spark: SparkSession, version: int | None = None) -> int:
-        m = self._read_manifest()
-        if version is None:
-            older = [e["id"] for e in m["versions"] if e["id"] < (m["current"] or 0)]
-            if not older:
-                raise FileNotFoundError(f"{self.path}: no prior version to restore")
-            version = max(older)
-        self._entry(m, version)
-        # plain statement (not assert): the verification read must survive -O
-        self.read(spark, version).count()
-        m["current"] = version
-        self._write_manifest(m)
-        return version
-
-    def _vacuum(self) -> None:
-        m = self._read_manifest()
-        keep = {e["id"] for e in sorted(m["versions"], key=lambda e: -e["id"])[: self.max_versions]}
-        if m["current"] is not None:
-            keep.add(m["current"])
-        dropped = [e for e in m["versions"] if e["id"] not in keep]
-        if not dropped:
-            return
-        kept_entries = [e for e in m["versions"] if e["id"] in keep]
-        referenced = {s for e in kept_entries for segs in e["parts"].values() for s in segs}
-        for e in dropped:
-            for segs in e["parts"].values():
-                for s in segs:
-                    if s not in referenced:
-                        shutil.rmtree(self._sdir(s), ignore_errors=True)
-        m["versions"] = kept_entries
-        self._write_manifest(m)
 
 
 def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import random
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -319,6 +319,79 @@ def test_partitioned_table_matches_dict_model(spark, tmp_path_factory, ops):
         wrote = True
     got = sorted(map(tuple, t.read(spark).select("id", "g", "v").collect()))
     assert got == sorted(model_rows)
+
+
+@settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    st.integers(1, 3),
+    st.lists(
+        st.tuples(
+            st.sampled_from(["overwrite", "append", "merge", "compact", "restore"]),
+            st.dictionaries(st.integers(0, 9), st.integers(0, 99), min_size=1, max_size=5),
+        ),
+        min_size=1,
+        max_size=6,
+    ),
+)
+# retention drops versions whose base segment retained appends still share
+@example(
+    2,
+    [("overwrite", {1: 1}), ("append", {2: 2}), ("append", {3: 3}),
+     ("restore", {0: 0}), ("merge", {2: 5}), ("compact", {0: 0})],
+)
+def test_versioned_table_matches_dict_model(spark, tmp_path_factory, max_versions, ops):
+    """VersionedTable vs an in-memory model of the manifest log over random
+    overwrite/append/merge/compact/restore sequences: the current rows, the
+    retained history ids, and the `_s{n}` directories on disk (exactly the
+    segments the retained versions reference — retention vacuums the rest
+    and never a shared one)."""
+    import os
+
+    import pytest
+
+    from domanda_etl_spark.sinks import VersionedTable
+
+    t = VersionedTable(str(tmp_path_factory.mktemp("vtprop")), max_versions=max_versions)
+    versions: dict[int, tuple[list[tuple[int, int]], list[int]]] = {}
+    current = None
+    next_id = next_seg = 0
+    for op, batch in ops:
+        rows = sorted(batch.items())
+        if op == "restore" or (op == "compact" and current is None):
+            older = [v for v in versions if v < (current or 0)]
+            if not older:
+                with pytest.raises(FileNotFoundError):
+                    getattr(t, op)(spark)
+                continue
+            assert t.restore(spark) == max(older)
+            current = max(older)
+            continue
+        df = spark.createDataFrame(rows, "id long, v long")
+        live, segs = versions[current] if current is not None else ([], [])
+        if op == "overwrite":
+            got_v = t.overwrite(df)
+            live, segs = rows, [next_seg]
+        elif op == "append":
+            got_v = t.append(df)
+            live, segs = live + rows, segs + [next_seg]
+        elif op == "merge":
+            got_v = t.merge_upsert(spark, df, ["id"])
+            live, segs = [r for r in live if r[0] not in batch] + rows, [next_seg]
+        else:
+            got_v = t.compact(spark)
+            segs = [next_seg]
+        assert got_v == next_id
+        versions[next_id] = (live, segs)
+        current, next_id, next_seg = next_id, next_id + 1, next_seg + 1
+        keep = set(sorted(versions, reverse=True)[:max_versions]) | {current}
+        versions = {v: e for v, e in versions.items() if v in keep}
+
+    assert [e["id"] for e in t.history()] == sorted(versions, reverse=True)
+    referenced = {f"_s{s}" for _, segs in versions.values() for s in segs}
+    assert {d for d in os.listdir(t.path) if d.startswith("_s")} == referenced
+    if current is not None:
+        got = sorted(map(tuple, t.read(spark).select("id", "v").collect()))
+        assert got == sorted(versions[current][0])
 
 
 def test_merge_upsert_single_evaluation(spark, tmp_path_factory):

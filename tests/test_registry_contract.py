@@ -58,22 +58,15 @@ def test_window_freeze_covers_all_edits():
     drifted from the stamp — or that is missing from it — must be in
     _FIRST50, or this test is red until the window is re-composed and
     re-frozen."""
-    import json
-
-    from tools.backlog import FREEZE_FILE, source_hash
+    from tools.backlog import FREEZE_FILE, drift
 
     path = os.path.join(os.path.dirname(os.path.dirname(__file__)), FREEZE_FILE)
     assert os.path.exists(path), (
         f"{FREEZE_FILE} missing — run `python tools/backlog.py --freeze` "
         "after composing the window"
     )
-    stamp = json.load(open(path))
     window = set(ent._FIRST50)
-    drifted = [
-        n
-        for n in ent._REGISTRY
-        if stamp.get(n) != source_hash(n) and n not in window
-    ]
+    drifted = [n for n in drift() if n not in window]
     assert not drifted, (
         "queries modified (or added) after the window froze but NOT in "
         f"_FIRST50 — re-window and re-freeze: {drifted}"

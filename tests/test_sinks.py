@@ -159,10 +159,10 @@ def test_compact_collapses_segments(spark, table):
     for i in range(3):
         table.append(df_of(spark, 10 + i))
     m = table._read_manifest()
-    assert len(table._version_entry(m, m["current"])["segments"]) == 4
+    assert len(table._entry(m, m["current"])["segments"]) == 4
     v = table.compact(spark, target_partitions=1)
     m = table._read_manifest()
-    entry = table._version_entry(m, v)
+    entry = table._entry(m, v)
     assert entry["op"] == "compact" and len(entry["segments"]) == 1
     assert table.read(spark).count() == 4
     seg_dir = table._sdir(entry["segments"][0])
@@ -188,6 +188,47 @@ def test_legacy_manifest_rejected_loudly(spark, tmp_path):
         table.read(spark)
     with pytest.raises(ValueError, match="legacy"):
         table.append(spark.range(1))
+
+
+def test_manifest_entry_keys_pinned(spark, tmp_path):
+    """The on-disk manifest is the sinks' contract: both write the same
+    top-level keys, and a version entry carries exactly these keys in
+    this order (write_amp counts the manifest bytes)."""
+    import json
+    import os
+
+    from domanda_etl_spark.sinks import PartitionedVersionedTable
+
+    flat = VersionedTable(str(tmp_path / "flat"))
+    flat.overwrite(df_of(spark, 1))
+    flat.append(df_of(spark, 2))
+    parted = PartitionedVersionedTable(str(tmp_path / "parted"), "name")
+    parted.overwrite(df_of(spark, 1))
+    parted.merge_upsert(spark, df_of(spark, 2), ["id"])
+    for t, entry_keys in (
+        (flat, ["id", "ts", "op", "segments"]),
+        (parted, ["id", "ts", "op", "parts", "schema"]),
+    ):
+        with open(os.path.join(t.path, "_manifest.json")) as f:
+            m = json.load(f)
+        assert {"current", "next_id", "next_seg", "versions"} <= set(m)
+        assert [list(e) for e in m["versions"]] == [entry_keys, entry_keys]
+
+
+def test_manifest_of_the_other_sink_rejected_loudly(spark, tmp_path):
+    """A manifest written by one sink and opened by the other raises the
+    same 'legacy' ValueError as a pre-segment manifest, not a KeyError."""
+    from domanda_etl_spark.sinks import PartitionedVersionedTable
+
+    flat_path, parted_path = str(tmp_path / "flat"), str(tmp_path / "parted")
+    VersionedTable(flat_path).overwrite(df_of(spark, 1))
+    PartitionedVersionedTable(parted_path, "name").overwrite(df_of(spark, 1))
+    with pytest.raises(ValueError, match="legacy"):
+        PartitionedVersionedTable(flat_path, "name").read(spark)
+    with pytest.raises(ValueError, match="legacy"):
+        VersionedTable(parted_path).read(spark)
+    with pytest.raises(ValueError, match="legacy"):
+        VersionedTable(parted_path).history()
 
 
 def test_read_jdbc_requires_bounds_with_partition_column(spark):

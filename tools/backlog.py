@@ -11,6 +11,8 @@ to `_FIRST50` in __spark_entry__.py, adopted round 11 per VERDICT r10
 
 Usage: python tools/backlog.py [--ages N]   (N = rows to print, def 60)
        python tools/backlog.py --freeze     (stamp WINDOW_FREEZE.json)
+       python tools/backlog.py --drift      (queries whose stamp drifted:
+                                             the policy-(b) window set)
 
 --freeze records a sha256 of every registry query's SOURCE + ORACLE +
 TRANSITIVE HELPER CODE at window-composition time into
@@ -266,6 +268,14 @@ def freeze() -> None:
     print(f"froze {len(stamp)} query hashes -> {FREEZE_FILE}")
 
 
+def drift() -> list[str]:
+    """Registry queries (registration order) whose source_hash differs
+    from the WINDOW_FREEZE.json stamp, or that the stamp lacks."""
+    with open(os.path.join(REPO_ROOT, FREEZE_FILE)) as f:
+        stamp = json.load(f)
+    return [n for n in entrymod._REGISTRY if stamp.get(n) != source_hash(n)]
+
+
 def evidence_rounds() -> dict[str, int]:
     """name -> latest CORRECTNESS round that checked it (0 = never)."""
     last: dict[str, int] = {}
@@ -279,6 +289,10 @@ def evidence_rounds() -> dict[str, int]:
 def main() -> None:
     if "--freeze" in sys.argv:
         freeze()
+        return
+    if "--drift" in sys.argv:
+        for n in drift():
+            print(n)
         return
     n_show = 60
     if "--ages" in sys.argv:
