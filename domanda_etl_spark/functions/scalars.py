@@ -14,6 +14,13 @@ plan construction (PERF.md round 7: 8.03 -> 2.30 s once the refresh
 composed SQL text). F13, F15, F16 and F18 are off that path and stay
 Column builders.
 
+A builder whose result references one non-cheap subexpression several
+times takes an optional `let` binder and wraps that subexpression in it.
+The default binder returns the text unchanged, so the result is one SQL
+expression; `operators.conform.Bindings` instead stages each bound
+subexpression as its own column, so the refresh evaluates it once per row
+and compiles it once (see `conform.Bindings`).
+
 Semantics are pinned to the reference implementation (file:line cited per
 function). Where the reference's docstring and code disagree, the docstring
 (= the published contract, mirrored in FIXTURES.md golden vectors) wins and
@@ -44,6 +51,11 @@ def _trimmed_sql(x: str) -> str:
     return f"trim(cast({x} AS STRING))"
 
 
+def _inline(sql: str) -> str:
+    """The default `let`: a bound subexpression stays inline."""
+    return sql
+
+
 # ---------------------------------------------------------------- F1
 def airline_code_sql(x: str) -> str:
     """F1 — leading alphabetic prefix of a flight number, uppercased;
@@ -53,7 +65,7 @@ def airline_code_sql(x: str) -> str:
 
 
 # ---------------------------------------------------------------- F2
-def to_time_hhmm_sql(x: str) -> str:
+def to_time_hhmm_sql(x: str, let=_inline) -> str:
     """F2 — normalize a time-ish string to 'HH:MM'.
 
     Order of attempts mirrors reference unified_transformer.py:33-74:
@@ -61,8 +73,8 @@ def to_time_hhmm_sql(x: str) -> str:
     anywhere in the string, else ''. ("2025-11-05 19:20:00" -> "19:20",
     "0 days 19:20:00" -> "19:20", "9:05" -> "09:05").
     """
-    s = _trimmed_sql(x)
-    ts = (
+    s = let(_trimmed_sql(x))
+    ts = let(
         f"coalesce(try_to_timestamp({s}, 'yyyy-M-d H:m:s'), "
         f"try_to_timestamp({s}, 'yyyy/M/d H:m'), "
         f"try_to_timestamp({s}, 'yyyy-M-d H:m'))"
@@ -70,7 +82,7 @@ def to_time_hhmm_sql(x: str) -> str:
     bare = f"regexp_extract({s}, '^(\\\\d{{1,2}}):(\\\\d{{2}})$', 0)"
     bare1 = f"regexp_extract({s}, '^(\\\\d{{1,2}}):(\\\\d{{2}})$', 1)"
     bare2 = f"regexp_extract({s}, '^(\\\\d{{1,2}}):(\\\\d{{2}})$', 2)"
-    any1 = f"regexp_extract({s}, '(\\\\d{{1,2}}):(\\\\d{{2}})', 1)"
+    any1 = let(f"regexp_extract({s}, '(\\\\d{{1,2}}):(\\\\d{{2}})', 1)")
     any2 = f"regexp_extract({s}, '(\\\\d{{1,2}}):(\\\\d{{2}})', 2)"
     return (
         f"CASE WHEN {s} IS NULL OR {s} = '' THEN '' "
@@ -82,16 +94,16 @@ def to_time_hhmm_sql(x: str) -> str:
 
 
 # ---------------------------------------------------------------- F3
-def duration_to_minutes_sql(x: str) -> str:
+def duration_to_minutes_sql(x: str, let=_inline) -> str:
     """F3 — '[D days ]HH:MM[:SS]' -> total minutes (int), seconds >= 30
     round up one minute; digit-only strings are already minutes; else null.
     Reference unified_transformer.py:76-113 ("0 days 02:05:00" -> 125,
     "01:30:30" -> 91, "95" -> 95).
     """
-    s = _trimmed_sql(x)
+    s = let(_trimmed_sql(x))
     pat = "'(?:(\\\\d+)\\\\s*days\\\\s*)?(\\\\d{1,2}):(\\\\d{2})(?::(\\\\d{2}))?'"
     g1 = f"regexp_extract({s}, {pat}, 1)"
-    g2 = f"regexp_extract({s}, {pat}, 2)"
+    g2 = let(f"regexp_extract({s}, {pat}, 2)")
     g3 = f"regexp_extract({s}, {pat}, 3)"
     g4 = f"regexp_extract({s}, {pat}, 4)"
     days = f"coalesce(CAST(nullif({g1}, '') AS INT), 0)"
@@ -109,24 +121,27 @@ def duration_to_minutes_sql(x: str) -> str:
 
 
 # ---------------------------------------------------------------- F4
-def luggage_value_sql(x: str) -> str:
+def _luggage_number_sql(s: str) -> str:
+    return f"regexp_extract({s}, '(\\\\d+(?:\\\\.\\\\d+)?)', 1)"
+
+
+def luggage_value_sql(x: str, let=_inline) -> str:
     """F4a — first decimal number in a luggage string, as double; null when
     absent. Reference cola_transformer.py:87-119 / unified_transformer.py:115-147
     ("1件" -> 1.0, "25 公斤" -> 25.0, "無" -> null)."""
-    s = _trimmed_sql(x)
-    n = f"regexp_extract({s}, '(\\\\d+(?:\\\\.\\\\d+)?)', 1)"
+    n = let(_luggage_number_sql(let(_trimmed_sql(x))))
     return f"CASE WHEN {n} != '' THEN CAST({n} AS DOUBLE) END"
 
 
-def luggage_unit_sql(x: str) -> str:
+def luggage_unit_sql(x: str, let=_inline) -> str:
     """F4b — unit: digits/whitespace/dots stripped, then normalized
     (contains 件 -> 件; contains 公斤/kg/KG/Kg -> 公斤). Per the reference
     docstring contract (FIXTURES.md A.7) an unrecognized unit with no
     number yields '' ("無" -> ''); with a number the raw residue is kept
     (code behavior, reference unified_transformer.py:139-146)."""
-    s = _trimmed_sql(x)
-    raw = f"regexp_replace({s}, '[\\\\d\\\\s\\\\.]+', '')"
-    num = f"regexp_extract({s}, '(\\\\d+(?:\\\\.\\\\d+)?)', 1)"
+    s = let(_trimmed_sql(x))
+    raw = let(f"regexp_replace({s}, '[\\\\d\\\\s\\\\.]+', '')")
+    num = let(_luggage_number_sql(s))
     unit = (
         f"CASE WHEN contains({raw}, '件') THEN '件' "
         f"WHEN contains({raw}, '公斤') OR contains({raw}, 'kg') "
@@ -137,13 +152,13 @@ def luggage_unit_sql(x: str) -> str:
 
 
 # ---------------------------------------------------------------- F5
-def luggage_reassemble_sql(x: str) -> str:
+def luggage_reassemble_sql(x: str, let=_inline) -> str:
     """F5 — '<number><unit>' with integer-valued floats printed as ints
     ('1件', '25公斤'); number-only -> str(number); no number -> ''.
     Reference cola_transformer.py:247-269."""
-    v = luggage_value_sql(x)
-    u = luggage_unit_sql(x)
-    n_str = (
+    v = let(luggage_value_sql(x, let))
+    u = let(luggage_unit_sql(x, let))
+    n_str = let(
         f"CASE WHEN {v} = floor({v}) THEN CAST(CAST({v} AS BIGINT) AS STRING) "
         f"ELSE CAST({v} AS STRING) END"
     )
@@ -154,19 +169,21 @@ def luggage_reassemble_sql(x: str) -> str:
 
 
 # ---------------------------------------------------------------- F6
-def to_date_yyyy_mm_dd_sql(x: str) -> str:
+def to_date_yyyy_mm_dd_sql(x: str, let=_inline) -> str:
     """F6 — parse several datetime shapes to 'YYYY/MM/DD'; '' when
     unparseable. Reference cola_transformer.py:50-85
     ("2025-11-05 19:20:00" -> "2025/11/05"). The format-less
     try_to_timestamp is the ISO-ish fallback (the reference uses
-    pd.to_datetime)."""
-    s = _trimmed_sql(x)
-    ts = (
+    pd.to_datetime), except for a bare time ('9:05', 'T01:30:30'): Spark
+    and pandas both date that with the wall clock's today, so it yields ''
+    — no hidden clock in a pure function (SURVEY.md Q4)."""
+    s = let(_trimmed_sql(x))
+    ts = let(
         f"coalesce(try_to_timestamp({s}, 'yyyy-M-d H:m:s'), "
         f"try_to_timestamp({s}, 'yyyy-M-d'), "
         f"try_to_timestamp({s}, 'yyyy/M/d H:m'), "
         f"try_to_timestamp({s}, 'yyyy/M/d'), "
-        f"try_to_timestamp({s}))"
+        f"CASE WHEN {s} NOT RLIKE '^T?\\\\d{{1,2}}:' THEN try_to_timestamp({s}) END)"
     )
     return (
         f"CASE WHEN {ts} IS NOT NULL THEN date_format({ts}, 'yyyy/MM/dd') "
@@ -199,7 +216,7 @@ def attach_year_sql(y: str, mmdd: str) -> str:
 
 
 # ---------------------------------------------------------------- F10
-def canonical_flight_number_sql(x: str) -> str:
+def canonical_flight_number_sql(x: str, let=_inline) -> str:
     """F10 — trim, strip ALL whitespace, uppercase, zero-pad the numeric
     tail of 2-letter/digit prefixed flight numbers: CI73 -> CI073,
     CI7 -> CI007. Nulls -> ''. Reference set_transformer.py:85-92."""
@@ -207,7 +224,7 @@ def canonical_flight_number_sql(x: str) -> str:
     # variable substitution eats `${...}` (yields ''), so the zero-padding
     # is expressed as CASE + substring. The two 4/3-char patterns are
     # mutually exclusive, so their CASE order does not matter.
-    s = f"upper(regexp_replace(trim(coalesce(cast({x} AS STRING), '')), '\\\\s+', ''))"
+    s = let(f"upper(regexp_replace(trim(coalesce(cast({x} AS STRING), '')), '\\\\s+', ''))")
     return (
         f"CASE WHEN {s} RLIKE '^[A-Z0-9]{{2}}\\\\d{{2}}$' "
         f"THEN concat(substring({s}, 1, 2), '0', substring({s}, 3, 2)) "
@@ -286,52 +303,32 @@ def collapse_whitespace(c: Column | str) -> Column:
 
 
 # ---------------------------------------------------------------- F17
-def normalize_join_date_stage1_sql(inner: str) -> str:
-    """First half of the join-date normalize as a LINEAR chain (every
-    regexp used exactly once): dots/dashes -> '/', trim, strip a leading
-    or trailing 4-digit year. Splitting F17 in two stages (with a
-    one-evaluation barrier between, see operators.conform.one_eval_barrier)
-    keeps the composed expression tree linear — the single-expression form
-    below repeats subtrees ~70x, which both multiplies per-row regex work
-    and overflows janino's 64 KB generated-method limit when several keys
-    land in one fused projection (measured on the flagship, r13)."""
+def normalize_join_date_sql(inner: str, let=_inline) -> str:
+    """F17 — canonicalize a date-ish join key to 'MM/DD':
+    '.'/'-' -> '/', strip leading 'YYYY/' or trailing '/YYYY', zero-pad
+    M/D, validate by parsing MM/dd — unparseable values pass through
+    UNCHANGED (the reference's keep-original rule,
+    unified_transformer.py:244-257).
+
+    The stripped value is read three times and the zero-padded one twice;
+    inline, the padded CASE repeats the whole regex chain about ten
+    times, so multi-key normalization binds both with `let`
+    (joins.normalize_join_keys does). The result is never NULL when
+    `inner` is not: no join-key null check is inferred over it."""
     s = (
         "trim(regexp_replace(regexp_replace("
         f"cast(({inner}) AS STRING), '\\\\.', '/'), '-', '/'))"
     )
     s = f"regexp_replace({s}, '^\\\\s*\\\\d{{4}}\\\\s*/', '')"
-    return f"regexp_replace({s}, '/\\\\s*\\\\d{{4}}\\\\s*$', '')"
-
-
-def normalize_join_date_stage2_sql(inner: str) -> str:
-    """Second half of the join-date normalize: zero-pad M/D if the stage-1
-    output looks like one, then canonicalize through a MM/dd parse with
-    unparseable values kept verbatim. `inner` should be a plain attribute
-    (the stage-1 output behind a barrier) — it is referenced ~10 times."""
+    s = let(f"regexp_replace({s}, '/\\\\s*\\\\d{{4}}\\\\s*$', '')")
     pat = "'^\\\\s*(\\\\d{1,2})\\\\s*/\\\\s*(\\\\d{1,2})\\\\s*$'"
-    m = f"regexp_extract({inner}, {pat}, 1)"
-    d = f"regexp_extract({inner}, {pat}, 2)"
-    padded = (
+    m = let(f"regexp_extract({s}, {pat}, 1)")
+    d = f"regexp_extract({s}, {pat}, 2)"
+    padded = let(
         f"CASE WHEN {m} != '' THEN "
-        f"concat(lpad({m}, 2, '0'), '/', lpad({d}, 2, '0')) ELSE {inner} END"
+        f"concat(lpad({m}, 2, '0'), '/', lpad({d}, 2, '0')) ELSE {s} END"
     )
-    parsed = f"try_to_timestamp({padded}, 'MM/dd')"
-    return (
-        f"CASE WHEN {parsed} IS NOT NULL THEN "
-        f"date_format({parsed}, 'MM/dd') ELSE {padded} END"
-    )
-
-
-def normalize_join_date_sql(inner: str) -> str:
-    """F17 — canonicalize a date-ish join key to 'MM/DD':
-    '.'/'-' -> '/', strip leading 'YYYY/' or trailing '/YYYY', zero-pad
-    M/D, validate by parsing MM/dd — unparseable values pass through
-    UNCHANGED (the reference's keep-original rule,
-    unified_transformer.py:244-257). Single-expression composition of the
-    two stages — fine for one column, but multi-key normalization should
-    stage through a barrier (joins.normalize_join_keys does) to keep the
-    expression tree linear."""
-    return normalize_join_date_stage2_sql(normalize_join_date_stage1_sql(inner))
+    return f"coalesce(date_format(try_to_timestamp({padded}, 'MM/dd'), 'MM/dd'), {padded})"
 
 
 # ---------------------------------------------------------------- F18
@@ -343,14 +340,14 @@ def epoch_now() -> Column:
 
 
 # ---------------------------------------------------------------- J2
-def normalize_join_key_sql(name: str, strip_all_whitespace: bool = False) -> str:
+def normalize_join_key_sql(name: str, strip_all_whitespace: bool = False, let=_inline) -> str:
     """J2 — full join-key canonicalization chain over the column `name`:
     stringify, trim, collapse whitespace, placeholder -> '', uppercase;
     flight/cabin keys additionally drop ALL internal whitespace. Reference
     unified_transformer.py:216-243. Joining on '' (never NULL) is
     load-bearing: placeholder keys must match each other (SURVEY.md Q1)."""
     q = _sql_ident(name)
-    s = f"regexp_replace(trim(coalesce(cast({q} AS STRING), '')), '\\\\s+', ' ')"
+    s = let(f"regexp_replace(trim(coalesce(cast({q} AS STRING), '')), '\\\\s+', ' ')")
     placeholders = ", ".join(f"'{p}'" for p in PLACEHOLDERS)
     s = f"CASE WHEN lower({s}) IN ({placeholders}) THEN '' ELSE {s} END"
     s = f"upper({s})"

@@ -55,23 +55,74 @@ def blank_strings_to_null(df: DataFrame, columns: list[str] | None = None) -> Da
     return df.selectExpr(*exprs)
 
 
+class Bindings:
+    """Stages the shared subexpressions of SQL-text expressions as columns.
+
+    Pass an instance as the `let` of a `functions.scalars` builder: each
+    subexpression the builder binds becomes a temporary column, and the
+    builder's result reads it as a plain attribute. The same SQL text bound
+    twice (the trimmed value two builders read) is one column. `apply`
+    adds the temporaries in dependency layers, one projection per layer,
+    then the requested columns, and drops the temporaries.
+
+    No barrier is needed to keep the layers apart: a bound subexpression
+    is not cheap and the layer above reads it more than once, and
+    CollapseProject inlines only cheap producers or ones read once. So each
+    subexpression is evaluated once per row and generated once in the
+    stage's code — CASE branches are excluded from codegen subexpression
+    elimination, and inline they repeat their regex subtrees (the cola
+    luggage reassembly repeated ~90 regexes per column). Predicate pushdown
+    does substitute through the layers: a filter over a staged column
+    still needs `one_eval_barrier` below it."""
+
+    PREFIX = "__let"
+
+    def __init__(self) -> None:
+        self._layers: list[dict[str, str]] = []
+        self._ident: dict[str, str] = {}  # SQL text -> quoted temporary
+        self._layer: dict[str, int] = {}  # quoted temporary -> its layer
+
+    def __call__(self, sql: str) -> str:
+        if sql in self._ident:
+            return self._ident[sql]
+        layer = max((d + 1 for q, d in self._layer.items() if q in sql), default=0)
+        name = f"{self.PREFIX}{len(self._ident)}"
+        q = f"`{name}`"
+        if layer == len(self._layers):
+            self._layers.append({})
+        self._layers[layer][name] = sql
+        self._ident[sql], self._layer[q] = q, layer
+        return q
+
+    def apply(self, df: DataFrame, cols: dict[str, str], select: bool = False) -> DataFrame:
+        """`df` with `cols` ({name: SQL text}) added, or with only `cols`
+        when `select`."""
+        for layer in self._layers:
+            df = df.selectExpr("*", *[f"({sql}) AS `{n}`" for n, sql in layer.items()])
+        if select:
+            return df.selectExpr(
+                *[f"({sql}) AS `{c.replace('`', '``')}`" for c, sql in cols.items()]
+            )
+        df = df.withColumns({c: F.expr(sql) for c, sql in cols.items()})
+        return df.drop(*[n for layer in self._layers for n in layer])
+
+
 def one_eval_barrier(df: DataFrame) -> DataFrame:
     """Structural one-evaluation barrier: everything ABOVE this point
     references the columns computed BELOW it as plain attributes.
 
     explode(array(struct(*))) is a Generate node: CollapseProject cannot
-    inline a generator output into upper expressions, and predicate
-    pushdown rewrites upper filters in terms of the generator's output
-    fields instead of substituting the full producing expression — so a
-    computed column evaluates exactly ONCE per row no matter how many
-    upper expressions (projections, filter conditions, join-key
-    null-checks) reference it. This matters twice on expression-heavy
-    plans: per-row cost (a CASE whose branches repeat a regex subtree
-    re-executes it at every reference — CASE branches are excluded from
-    codegen subexpression elimination), and compiled-code SIZE (a fused
-    projection whose inlined expressions exceed janino's hard 64 KB
-    method limit throws the whole stage back to interpreted execution —
-    the generated `project_doConsume` must stay under the limit).
+    inline a generator output into upper expressions, predicate pushdown
+    rewrites upper filters in terms of the generator's output fields
+    instead of substituting the full producing expression, and no
+    projection is pushed through it into a Union's children. Two uses
+    remain where `Bindings` staging is not enough:
+    - below a filter over computed columns (clean_supplier's P4 row
+      filter over the canonical flight numbers), which pushdown would
+      otherwise rewrite over the whole producing expression;
+    - above a Union whose upper projections must be planned and compiled
+      once, not once per child (the tagged union of the five supplier
+      sides in plans.domanda.join_price_and_tax).
     Cost: one struct wrap/unwrap per row, and column pruning stops at the
     barrier — callers must project needed columns first."""
     return df.select(F.explode(F.array(F.struct("*"))).alias("_r")).select("_r.*")

@@ -4,9 +4,10 @@ The reference's flagship join: spine table left-joined against 5 supplier
 tables on a 14-column canonicalized composite key (reference
 unified_transformer.py:175-288). Spark-first design decisions:
 
-- Supplier sides are small after the incremental filter -> `broadcast()`
-  hints; AQE converts to broadcast anyway if stats allow, the hint makes it
-  deterministic. 5 broadcast joins = zero shuffles of the spine.
+- Supplier sides are small after the incremental filter -> a `broadcast()`
+  hint; AQE converts to broadcast anyway if stats allow, the hint makes it
+  deterministic. The sides are grouped per key and joined once, so 5
+  suppliers are 1 broadcast join and zero shuffles of the spine.
 - Keys are canonicalized to NON-NULL strings ('' for missing) before the
   join — placeholder keys must match each other (reference behavior,
   SURVEY.md Q1). Plain equi-join, never null-safe equality.
@@ -38,37 +39,36 @@ def normalize_join_keys(
     further normalized to MM/DD with unparseable values kept verbatim
     (reference unified_transformer.py:216-258).
 
-    The date keys are computed in THREE stages separated by one-evaluation
-    barriers (conform.one_eval_barrier). A single-expression date normalize
-    repeats its regex subtree ~70x (CASE branches re-expand their input),
-    and the enrich join then pushes inferred join-key predicates into each
-    side with that expression inlined — at 14 keys the fused supplier-side
-    projection overflowed janino's hard 64 KB generated-method limit and
-    the whole stage fell back to interpreted execution (flagship measured
-    2.4x slower, r13). Staging keeps every expression over plain
-    attributes: linear regex chains, compiled codegen, one evaluation per
-    row."""
+    One `conform.Bindings` stages the subexpressions each key reads more
+    than once (the collapsed string, the date's stripped and zero-padded
+    forms). A single-expression date normalize repeats its regex subtree
+    ~10x, and at 14 keys the fused projection overflowed janino's hard
+    64 KB generated-method limit, throwing the stage back to interpreted
+    execution (flagship measured 2.4x slower, r13). Every output is
+    non-NULL, so the join infers no key null-check that predicate pushdown
+    would re-inline below the stages."""
     strip_ws = set(strip_ws_keys or [])
     dates = set(date_keys or [])
+    b = conform.Bindings()
     out = {}
     for k in keys:
-        # SQL text: ONE py4j call per key instead of ~30 (the Column API
-        # crosses py4j per expression node; at 84 keys per pipeline build
-        # that is ~2 s of pure plan construction, PERF.md round 7).
-        sql = scalars.normalize_join_key_sql(k, strip_all_whitespace=k in strip_ws)
-        out[k] = F.expr(sql)
-    df = df.withColumns(out)
-    if dates:
-        qi = scalars._sql_ident
-        df = conform.one_eval_barrier(df)
-        df = df.withColumns(
-            {k: F.expr(scalars.normalize_join_date_stage1_sql(qi(k))) for k in dates}
-        )
-        df = conform.one_eval_barrier(df)
-        df = df.withColumns(
-            {k: F.expr(scalars.normalize_join_date_stage2_sql(qi(k))) for k in dates}
-        )
-    return df
+        sql = scalars.normalize_join_key_sql(k, strip_all_whitespace=k in strip_ws, let=b)
+        out[k] = scalars.normalize_join_date_sql(b(sql), b) if k in dates else sql
+    return b.apply(df, out)
+
+
+SIDE = "__side"
+
+
+def tag_sides(sides: dict[str, tuple[DataFrame, list[str]]], keys: list[str]) -> DataFrame:
+    """Every side of `enrich_left_join` in one frame: the keys, the side's
+    name in `__side`, and each side's payload columns (NULL on the other
+    sides' rows)."""
+    frames = [
+        df.select(*keys, F.lit(name).alias(SIDE), *payload)
+        for name, (df, payload) in sides.items()
+    ]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), frames)
 
 
 def enrich_left_join(
@@ -76,21 +76,55 @@ def enrich_left_join(
     sides: dict[str, tuple[DataFrame, list[str]]],
     keys: list[str],
 ) -> DataFrame:
-    """J1 — successive left equi-joins of `spine` against each named side.
+    """J1 — `spine` left-joined to each named side on `keys`, as if by
+    successive left joins.
 
     sides: {name: (df, payload_cols)} — each side is pre-projected to
-    keys+payload (Q2 fix) and broadcast; deduplication is NOT applied
-    (many-to-many fan-out is intentional reference semantics, SURVEY.md
-    Q3).
-    """
-    def prep(side: DataFrame, payload: list[str]) -> DataFrame:
-        return F.broadcast(side.select(*keys, *payload))
+    keys+payload (Q2 fix); deduplication is NOT applied (many-to-many
+    fan-out is intentional reference semantics, SURVEY.md Q3). See
+    `enrich_left_join_tagged` for the plan."""
+    payloads = {name: payload for name, (_, payload) in sides.items()}
+    return enrich_left_join_tagged(spine, tag_sides(sides, keys), keys, payloads)
 
-    return reduce(
-        lambda acc, item: acc.join(prep(*item[1]), on=keys, how="left"),
-        sides.items(),
-        spine,
+
+def enrich_left_join_tagged(
+    spine: DataFrame,
+    tagged: DataFrame,
+    keys: list[str],
+    payloads: dict[str, list[str]],
+) -> DataFrame:
+    """J1 over a `tag_sides` frame: ONE broadcast left join, whatever the
+    number of sides.
+
+    The build side groups the sides per key into one
+    `collect_list(struct(payload))` per side, then one `explode_outer` per
+    side turns each key's lists into the product of its matches: a side
+    with k rows for the key contributes k choices, a side with none one
+    NULL payload. Left-joining the spine to that product once gives
+    exactly the rows successive left joins give (SURVEY.md Q3), and a
+    spine row no side matches keeps one row of NULL payload. Payload rows
+    whose fields are all NULL still count as matches (the struct itself is
+    not NULL). The fan-out runs on the small side, so the spine's stage
+    holds one join and no generator. Output columns: the keys, the other
+    spine columns, then the payloads in side order."""
+    lists = [f"{SIDE}{i}" for i in range(len(payloads))]
+    product = tagged.groupBy(*keys).agg(
+        *[
+            F.collect_list(F.when(F.col(SIDE) == name, F.struct(*payload))).alias(lst)
+            for lst, (name, payload) in zip(lists, payloads.items())
+        ]
     )
+    for lst in lists:
+        product = product.withColumn(lst, F.explode_outer(lst))
+    product = product.select(
+        *keys,
+        *[
+            F.col(lst)[p].alias(p)
+            for lst, payload in zip(lists, payloads.values())
+            for p in payload
+        ],
+    )
+    return spine.join(F.broadcast(product), on=keys, how="left")
 
 
 def asof_join(

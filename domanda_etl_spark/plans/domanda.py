@@ -4,8 +4,8 @@ Reference pipeline (etl/pipeline.py:29-57): 6 BigQuery scans -> per-supplier
 pandas cleaning -> 14-key multi-way left join -> 94-column projection ->
 cross-source latest-wins dedup -> truncate-and-load. Here the whole thing is
 ONE lazy DataFrame DAG: 6 parquet scans with pushed filters -> narrow
-expression maps -> 5 broadcast left joins -> window dedup; the only action
-is the sink write.
+expression maps -> one broadcast left join against the five suppliers'
+grouped union -> window dedup; the only action is the sink write.
 
 Semantic parity notes (SURVEY.md §8): join keys are canonicalized to ''
 (never NULL) so placeholder keys match each other (Q1); supplier sides are
@@ -44,16 +44,21 @@ SUPPLIER_PAYLOADS = {
     "rich": ["rich_mond_air_tickets_price", "rich_mond_tax"],
 }
 
-# pandas-side rename of supplier raw columns (reference set_transformer.py:28-58
-# and clones; same shape for every supplier except the price/tax targets)
-def _supplier_rename(price_col: str, tax_col: str, price_to: str, tax_to: str) -> dict[str, str]:
-    m = {"去程日期": "出發日期", "回程日期": "返回日期", price_col: price_to, tax_col: tax_to}
+# pandas-side rename of supplier raw key columns (reference
+# set_transformer.py:28-58 and clones; the same for every supplier, whose
+# price/tax columns are renamed to its SUPPLIER_PAYLOADS names)
+def _supplier_key_rename() -> dict[str, str]:
+    m = {"去程日期": "出發日期", "回程日期": "返回日期"}
     for i in LEGS:
         m[f"去程航班編號{i}"] = f"去程_航班編號{i}"
         m[f"回程航班編號{i}"] = f"回程_航班編號{i}"
         m[f"去程艙等{i}"] = f"去程_艙等{i}"
         m[f"回程艙等{i}"] = f"回程_艙等{i}"
     return m
+
+
+SUPPLIER_KEY_RENAME = _supplier_key_rename()
+SUPPLIER_RAW_KEYS = [raw for raw, key in SUPPLIER_KEY_RENAME.items() if key in JOIN_KEYS]
 
 
 # cola rename map (reference cola_transformer.py:121-168)
@@ -98,35 +103,19 @@ def clean_cola(df: DataFrame, now_epoch: float | None = None) -> DataFrame:
     metadata defaults (建立時間/KP; clock injected for determinism, Q4).
     """
     # SQL text throughout: one py4j call per column instead of one per
-    # expression node (PERF.md round 7; see the scalars.py docstring).
+    # expression node (PERF.md round 7; see the scalars.py docstring). One
+    # Bindings stages what the luggage and date builders read repeatedly.
     qi = S._sql_ident
     df = conform.rename_existing(df, _cola_rename())
-    df = df.withColumns(
-        {c: F.expr(S.despace_sql(qi(c))) for c in df.columns if "艙等" in c}
-    )
-    df = df.withColumns(
-        {c: F.expr(S.luggage_reassemble_sql(qi(c))) for c in df.columns if "行李" in c}
-    )
-    if "去程_出發時間1" in df.columns:
-        dep = qi("去程_出發時間1")
-        df = df.withColumns(
-            {
-                "出發日期": F.expr(
-                    S.date_to_mm_dd_slice_sql(S.to_date_yyyy_mm_dd_sql(dep))
-                ),
-                "出發年份": F.expr(S.year_prefix_sql(dep)),
-            }
-        )
-    if "回程_出發時間1" in df.columns:
-        ret = qi("回程_出發時間1")
-        df = df.withColumns(
-            {
-                "返回日期": F.expr(
-                    S.date_to_mm_dd_slice_sql(S.to_date_yyyy_mm_dd_sql(ret))
-                ),
-                "返回年份": F.expr(S.year_prefix_sql(ret)),
-            }
-        )
+    b = conform.Bindings()
+    cols = {c: S.despace_sql(qi(c)) for c in df.columns if "艙等" in c}
+    cols.update({c: S.luggage_reassemble_sql(qi(c), b) for c in df.columns if "行李" in c})
+    for leg, day, year in (("去程", "出發日期", "出發年份"), ("回程", "返回日期", "返回年份")):
+        if f"{leg}_出發時間1" in df.columns:
+            t = qi(f"{leg}_出發時間1")
+            cols[day] = S.date_to_mm_dd_slice_sql(S.to_date_yyyy_mm_dd_sql(t, b))
+            cols[year] = S.year_prefix_sql(t)
+    df = b.apply(df, cols)
     df = conform.ensure_columns(df, {k: "string" for k in JOIN_KEYS})
     now = F.lit(float(now_epoch)) if now_epoch is not None else S.epoch_now()
     df = conform.default_fill(df, {"建立時間": now.cast("double"), "KP": F.lit("")})
@@ -137,13 +126,18 @@ def clean_supplier(df: DataFrame, raw_price: str, raw_tax: str, price_to: str, t
     """Supplier cleaning — reference set_transformer.py:13-26 and clones:
     rename -> flight-number canonicalize (F10) + row-validity filter (P4) ->
     date slice to MM/DD (F7)."""
+    return _clean_supplier_keys(conform.rename_existing(df, {raw_price: price_to, raw_tax: tax_to}))
+
+
+def _clean_supplier_keys(df: DataFrame) -> DataFrame:
+    """clean_supplier past the price/tax rename; run_pipeline runs it once
+    on the tagged union of all five suppliers."""
     qi = S._sql_ident
-    df = conform.rename_existing(df, _supplier_rename(raw_price, raw_tax, price_to, tax_to))
+    df = conform.rename_existing(df, SUPPLIER_KEY_RENAME)
     flight_cols = [c for c in FLIGHT_KEYS if c in df.columns]
     if flight_cols:
-        df = df.withColumns(
-            {c: F.expr(S.canonical_flight_number_sql(qi(c))) for c in flight_cols}
-        )
+        b = conform.Bindings()
+        df = b.apply(df, {c: S.canonical_flight_number_sql(qi(c), b) for c in flight_cols})
         df = conform.one_eval_barrier(df)
         df = df.filter(F.expr(f"NOT ({S.invalid_flight_row_sql(flight_cols)})"))
     date_cols = {
@@ -173,16 +167,26 @@ def join_price_and_tax(
     f_eztravel: DataFrame,
     rich: DataFrame,
 ) -> DataFrame:
-    """J1 — cola spine, 5 broadcast left joins on the canonicalized 14-key.
-    Reference unified_transformer.py:175-288."""
+    """J1 — cola spine left-joined to the 5 cleaned suppliers on the
+    canonicalized 14-key. Reference unified_transformer.py:175-288."""
+    keyed = {k: "string" for k in JOIN_KEYS}
+    frames = (set_df, lion, eztravel, f_eztravel, rich)
     sides = {
-        "set": (normalize_for_join(set_df), SUPPLIER_PAYLOADS["set"]),
-        "lion": (normalize_for_join(lion), SUPPLIER_PAYLOADS["lion"]),
-        "eztravel": (normalize_for_join(eztravel), SUPPLIER_PAYLOADS["eztravel"]),
-        "f_eztravel": (normalize_for_join(f_eztravel), SUPPLIER_PAYLOADS["f_eztravel"]),
-        "rich": (normalize_for_join(rich), SUPPLIER_PAYLOADS["rich"]),
+        name: (conform.ensure_columns(df, keyed), payload)
+        for (name, payload), df in zip(SUPPLIER_PAYLOADS.items(), frames)
     }
-    return joins.enrich_left_join(normalize_for_join(cola), sides, JOIN_KEYS)
+    return _join_tagged(cola, conform.one_eval_barrier(joins.tag_sides(sides, JOIN_KEYS)))
+
+
+def _join_tagged(cola: DataFrame, tagged: DataFrame) -> DataFrame:
+    """J1 over the suppliers' tagged union. The union sits behind a
+    one_eval_barrier, so the key normalization above it is planned and
+    compiled once, not once per supplier; joins.enrich_left_join_tagged
+    then joins all five in one broadcast join with the successive
+    left-join fan-out (Q3)."""
+    return joins.enrich_left_join_tagged(
+        normalize_for_join(cola), normalize_for_join(tagged), JOIN_KEYS, SUPPLIER_PAYLOADS
+    )
 
 
 def attach_year(df: DataFrame) -> DataFrame:
@@ -199,17 +203,22 @@ def attach_year(df: DataFrame) -> DataFrame:
 
 def project_output(df: DataFrame) -> DataFrame:
     """P7 — the 94-column output projection (reference
-    unified_transformer.py:290-503), as ONE selectExpr of pre-composed SQL
-    strings: one py4j call carries the whole projection instead of one per
-    expression node (~1 s of pure plan-construction latency at this
-    breadth, PERF.md round 7). The full-pipeline DuckDB hash covers the
-    composition on real data."""
+    unified_transformer.py:290-503), as pre-composed SQL strings: one
+    selectExpr per Bindings layer and one for the 94 outputs, instead of
+    one py4j call per expression node (~1 s of pure plan-construction
+    latency at this breadth, PERF.md round 7). The times, durations and
+    luggage read their trimmed values and regex groups as staged columns.
+    The full-pipeline DuckDB hash covers the composition on real data."""
     qi = S._sql_ident
     cols = set(df.columns)
+    b = conform.Bindings()
     ident = lambda x: x  # noqa: E731
 
     def maybe(name: str, sql_fn) -> str:
         return sql_fn(qi(name)) if name in cols else "CAST(NULL AS STRING)"
+
+    def staged(sql_fn):
+        return lambda x: sql_fn(x, b)
 
     out: dict[str, str] = {}
     for i in LEGS:
@@ -220,35 +229,26 @@ def project_output(df: DataFrame) -> DataFrame:
         out[f"departure_arrival_airport_{i}"] = maybe(f"去程_到達機場{i}", S.first_token_sql)
         out[f"return_airport_{i}"] = maybe(f"回程_出發機場{i}", S.first_token_sql)
         out[f"return_arrival_airport_{i}"] = maybe(f"回程_到達機場{i}", S.first_token_sql)
+    hhmm = staged(S.to_time_hhmm_sql)
     for i in LEGS:
-        out[f"departure_flight_time_{i}"] = maybe(f"去程_出發時間{i}", S.to_time_hhmm_sql)
-        out[f"departure_arrival_flight_time_{i}"] = maybe(f"去程_到達時間{i}", S.to_time_hhmm_sql)
-        out[f"return_flight_time_{i}"] = maybe(f"回程_出發時間{i}", S.to_time_hhmm_sql)
-        out[f"return_arrival_flight_time_{i}"] = maybe(f"回程_到達時間{i}", S.to_time_hhmm_sql)
+        out[f"departure_flight_time_{i}"] = maybe(f"去程_出發時間{i}", hhmm)
+        out[f"departure_arrival_flight_time_{i}"] = maybe(f"去程_到達時間{i}", hhmm)
+        out[f"return_flight_time_{i}"] = maybe(f"回程_出發時間{i}", hhmm)
+        out[f"return_arrival_flight_time_{i}"] = maybe(f"回程_到達時間{i}", hhmm)
     for i in LEGS:
         out[f"departure_aircraft_type_{i}"] = maybe(f"去程_機型{i}", ident)
         out[f"return_aircraft_type_{i}"] = maybe(f"回程_機型{i}", ident)
     for i in LEGS:
-        dep, ret = f"去程行李{i}", f"回程行李{i}"
-        out[f"departure_luggage_value_{i}"] = (
-            S.luggage_value_sql(qi(dep)) if dep in cols else "CAST(NULL AS DOUBLE)"
-        )
-        out[f"departure_luggage_unit_{i}"] = maybe(dep, S.luggage_unit_sql)
-        out[f"return_luggage_value_{i}"] = (
-            S.luggage_value_sql(qi(ret)) if ret in cols else "CAST(NULL AS DOUBLE)"
-        )
-        out[f"return_luggage_unit_{i}"] = maybe(ret, S.luggage_unit_sql)
+        for side, name in (("departure", f"去程行李{i}"), ("return", f"回程行李{i}")):
+            out[f"{side}_luggage_value_{i}"] = (
+                S.luggage_value_sql(qi(name), b) if name in cols else "CAST(NULL AS DOUBLE)"
+            )
+            out[f"{side}_luggage_unit_{i}"] = maybe(name, staged(S.luggage_unit_sql))
     for i in LEGS:
-        out[f"departure_flight_duration_{i}"] = (
-            S.duration_to_minutes_sql(qi(f"去程_飛行時間{i}"))
-            if f"去程_飛行時間{i}" in cols
-            else "CAST(NULL AS INT)"
-        )
-        out[f"return_flight_duration_{i}"] = (
-            S.duration_to_minutes_sql(qi(f"回程_飛行時間{i}"))
-            if f"回程_飛行時間{i}" in cols
-            else "CAST(NULL AS INT)"
-        )
+        for side, name in (("departure", f"去程_飛行時間{i}"), ("return", f"回程_飛行時間{i}")):
+            out[f"{side}_flight_duration_{i}"] = (
+                S.duration_to_minutes_sql(qi(name), b) if name in cols else "CAST(NULL AS INT)"
+            )
     for i in LEGS:
         out[f"departure_flight_number_{i}"] = maybe(f"去程_航班編號{i}", ident)
         out[f"return_flight_number_{i}"] = maybe(f"回程_航班編號{i}", ident)
@@ -295,7 +295,7 @@ def project_output(df: DataFrame) -> DataFrame:
     out["kp"] = qi("KP")
     out["discount"] = qi("折扣")
     out["activity_fee_adjustment"] = qi("固定金額")
-    return df.selectExpr(*[f"({sql}) AS {qi(alias)}" for alias, sql in out.items()])
+    return b.apply(df, out, select=True)
 
 
 def remove_no_tax_rows(df: DataFrame) -> DataFrame:
@@ -324,11 +324,13 @@ def unify(
 ) -> DataFrame:
     """Join -> year re-attach -> 94-col projection -> tax filter -> blank->null
     (reference unified_transformer.py:149-173)."""
-    joined = join_price_and_tax(cola, set_df, lion, eztravel, f_eztravel, rich)
-    dated = attach_year(joined)
-    projected = project_output(dated)
-    filtered = remove_no_tax_rows(projected)
-    return conform.blank_strings_to_null(filtered)
+    return _project(join_price_and_tax(cola, set_df, lion, eztravel, f_eztravel, rich))
+
+
+def _project(joined: DataFrame) -> DataFrame:
+    """unify past the join."""
+    projected = project_output(attach_year(joined))
+    return conform.blank_strings_to_null(remove_no_tax_rows(projected))
 
 
 def dedup_latest(df: DataFrame) -> DataFrame:
@@ -379,13 +381,17 @@ def run_pipeline(
     """Full domanda pipeline as one lazy DAG (sinks applied by the caller).
 
     The eztravel/foreign split (reference etl/extractor.py:98,109) is the
-    caller's filter on 海外供應商 before clean_supplier.
+    caller's filter on 海外供應商 before clean_supplier. The five supplier
+    frames are tagged and unioned before their cleaning, so clean_supplier
+    and the key normalization each compile once for all five (the same rows
+    as cleaning each and then join_price_and_tax).
     """
     cola_c = clean_cola(cola, now_epoch=now_epoch)
-    set_c = clean_supplier(set_df, "票面價格", "稅金", *SUPPLIER_PAYLOADS["set"])
-    lion_c = clean_supplier(lion, "票面價格", "稅金", *SUPPLIER_PAYLOADS["lion"])
-    ez_c = clean_supplier(eztravel, "票面價格", "稅金", *SUPPLIER_PAYLOADS["eztravel"])
-    fez_c = clean_supplier(f_eztravel, "票面價格", "稅金", *SUPPLIER_PAYLOADS["f_eztravel"])
-    rich_c = clean_supplier(rich, "票面價格", "稅金", *SUPPLIER_PAYLOADS["rich"])
-    unified = unify(cola_c, set_c, lion_c, ez_c, fez_c, rich_c)
-    return dedup_latest(unified)
+    raw = {k: "string" for k in SUPPLIER_RAW_KEYS}
+    frames = (set_df, lion, eztravel, f_eztravel, rich)
+    sides = {}
+    for (name, (price, tax)), df in zip(SUPPLIER_PAYLOADS.items(), frames):
+        df = conform.rename_existing(df, {"票面價格": price, "稅金": tax})
+        sides[name] = (conform.ensure_columns(df, raw), [price, tax])
+    tagged = conform.one_eval_barrier(joins.tag_sides(sides, SUPPLIER_RAW_KEYS))
+    return dedup_latest(_project(_join_tagged(cola_c, _clean_supplier_keys(tagged))))

@@ -447,9 +447,12 @@ def test_flagship_codegen_compiles_strict(spark):
     ~r8 to r13 precisely because nothing asserted COMPILED execution.
     With spark.sql.codegen.fallback=false a generated-code compile
     failure THROWS instead of silently falling back — so this test goes
-    red if the one_eval_barrier staging in joins.py/conform.py is ever
-    removed and the fused supplier projections re-overflow Janino's
-    64 KB method limit."""
+    red if the subexpression staging (conform.Bindings in joins.py and
+    plans/domanda.py) is ever removed and a fused projection re-overflows
+    Janino's 64 KB method limit. The registry frames are leg-1 constants
+    that Catalyst folds; tests/test_domanda_pipeline.py::
+    test_refresh_compiles_without_fallback runs the same gate on the
+    benchmark lake's fully populated shape."""
     prev = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:
@@ -462,12 +465,15 @@ def test_flagship_regexp_node_budget(registry):
     """Companion budget gate: the pre-fix flagship plan carried ~2,000
     regexp nodes (every supplier branch re-deriving the 3-regex date
     normalization per join-key comparison); the barrier-staged form
-    carries ~450. A regression that re-inlines the normalization into
-    the join predicates blows this budget long before it re-overflows
-    codegen, so this fails earlier and cheaper than the strict gate."""
+    carried ~450. Staging each shared subexpression once
+    (conform.Bindings) and normalizing the five suppliers' union once
+    leaves 113. A regression that re-inlines a shared regex subtree, or
+    normalizes per supplier again, blows this budget long before it
+    re-overflows codegen, so this fails earlier and cheaper than the
+    strict gate."""
     p = plan_of(registry, "domanda_pipeline_full")
     n = p.count("regexp_replace") + p.count("regexp_extract")
-    assert n <= 600, f"flagship regexp node count {n} exceeds budget 600"
+    assert n <= 130, f"flagship regexp node count {n} exceeds budget 130"
 
 
 def test_dedup_family_no_corpus_scale_broadcast(registry):

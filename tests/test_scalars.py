@@ -104,6 +104,8 @@ def test_luggage_reassemble(spark, inp, out):
         ("2025/11/05", "2025/11/05"),
         ("garbage", ""),
         (None, ""),
+        ("9:05", ""),
+        ("T01:30:30", ""),
     ],
 )
 def test_to_date(spark, inp, out):
@@ -301,7 +303,9 @@ PINNED_DIGESTS = {
         "luggage_value": "2f101e7d32d91e8a32b69c6f36e3099c9b25d44c6209d7cef1afa56e3ec7a48a",
         "luggage_unit": "2226444f848ba01e86f7f2762f9ac40cf9dd1ae59081aa87666e8f7a3dca6f86",
         "luggage_reassemble": "8176a3f3b9bc330acdd60c5b348ee65bcc6f591ae5b00955ffb6a456a4626838",
-        "to_date_yyyy_mm_dd": "a687b04e31fa62842be2700e5555a9225098d2f8545e1a4f8ba21a2dc31de41e",
+        # re-pinned when bare times ('9:05', '01:30:30', '02:05:31') stopped
+        # taking the wall clock's date and became '' (the only change)
+        "to_date_yyyy_mm_dd": "258a576f1ac556f8e62c3d3ca5ce556abe1f6d1cb98d7d8681597452775ab9b0",
         "date_to_mm_dd_slice": "a1301b1ed21507ad25e0557045f9185d8a9ce914faaa7e7f8efc7da47d61f691",
         "year_prefix": "49c7d79d128496a73292d7ff7a0efe1c5c66d8cefaf4b8f35372c7808906570f",
         "despace": "39b2f20a075cccbe0fdae17e8ba1c58c744927b3a7785626fd4ef77fe9e1f39c",
@@ -389,3 +393,46 @@ def test_sql_twins_fuzz_random_strings(spark):
     ] + [None]
     sqls = {f.__name__.removesuffix("_sql"): f(_X) for f in UNARY_SQL} | KEY_SQL
     assert unary_digests(spark, vals, sqls) == PINNED_DIGESTS["fuzz"]
+
+
+# Builders that take a `let` binder, and join-key normalization composed
+# the way operators.joins.normalize_join_keys composes it.
+LET_SQL = {
+    "to_time_hhmm": S.to_time_hhmm_sql,
+    "duration_to_minutes": S.duration_to_minutes_sql,
+    "luggage_value": S.luggage_value_sql,
+    "luggage_unit": S.luggage_unit_sql,
+    "luggage_reassemble": S.luggage_reassemble_sql,
+    "to_date_yyyy_mm_dd": S.to_date_yyyy_mm_dd_sql,
+    "canonical_flight_number": S.canonical_flight_number_sql,
+    "normalize_join_key_strip": lambda x, let=S._inline: S.normalize_join_key_sql(
+        "x", strip_all_whitespace=True, let=let
+    ),
+    "normalize_join_date": lambda x, let=S._inline: S.normalize_join_date_sql(
+        let(S.normalize_join_key_sql("x", let=let)), let
+    ),
+}
+
+
+def test_staged_builders_match_inline(spark):
+    """conform.Bindings stages every bound subexpression as a column; each
+    builder's staged result equals its one-expression form on every
+    adversarial value and every fuzz string, and the staged plan
+    evaluates each regex once."""
+    from domanda_etl_spark.operators.conform import Bindings
+
+    rng = random.Random(7)
+    alphabet = "abcXYZ012345 \t:/-.件公斤kgKG無 days nan None"
+    vals = ADVERSARIAL_VALUES + [
+        "".join(rng.choice(alphabet) for _ in range(rng.randrange(0, 24))) for _ in range(200)
+    ]
+    df = spark.createDataFrame([(v,) for v in vals], "x string")
+    b = Bindings()
+    staged = b.apply(df, {n: f(_X, b) for n, f in LET_SQL.items()}, select=True)
+    inline = df.selectExpr(*[f"({f(_X)}) AS {n}" for n, f in LET_SQL.items()])
+    assert sorted(map(repr, staged.collect())) == sorted(map(repr, inline.collect()))
+
+    one = Bindings()
+    plan = one.apply(df, {"out": S.luggage_reassemble_sql(_X, one)}, select=True)
+    text = plan._jdf.queryExecution().optimizedPlan().toString()
+    assert text.count("regexp_extract") == 1 and text.count("regexp_replace") == 1
