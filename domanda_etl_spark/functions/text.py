@@ -112,13 +112,6 @@ def fingerprint(c: Column | str) -> Column:
     return F.md5(s)
 
 
-def minhash_element(shingle: Column, seed: int) -> Column:
-    """One MinHash permutation via md5('<seed>:'||shingle) — the lexicographic
-    MIN of these hex digests per document is a valid min-wise signature and is
-    portable to the DuckDB oracle (identical md5)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), shingle))
-
-
 def sentence_count(c: Column | str) -> Column:
     """Terminator-run sentence count, floored at 1 (a fragment with no
     terminal punctuation is one sentence). Deterministic regex heuristic —

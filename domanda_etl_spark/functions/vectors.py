@@ -32,13 +32,6 @@ def cosine(a: Column | str, b: Column | str) -> Column:
     return F.when((na > 0) & (nb > 0), d / (na * nb))
 
 
-def l2_distance(a: Column | str, b: Column | str) -> Column:
-    diff = F.zip_with(
-        _c(a), _c(b), lambda x, y: (x.cast("double") - y.cast("double")) * (x.cast("double") - y.cast("double"))
-    )
-    return F.sqrt(F.aggregate(diff, F.lit(0.0), lambda acc, v: acc + v))
-
-
 def srp_bits(a: Column | str, planes: list[list[float]]) -> Column:
     """Signed-random-projection LSH code: one bit per hyperplane
     (sign of <v, plane>), returned as a bit-string. Plane constants are

@@ -15,10 +15,10 @@ SURVEY.md Q4 determinism rule.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .parquet import load_table
 
 
 class Extractor:
@@ -44,7 +44,6 @@ class Extractor:
         self.base_dir = base_dir
         self.cutoff_epoch = float(cutoff_epoch)
         self.tables = {**self.TABLES, **(tables or {})}
-        self._scans: dict[str, DataFrame] = {}
 
     # ---- S1: ad-hoc SQL passthrough (etl/extractor.py:42-58) -------------
     def fetch_data_as_dataframe(self, query: str) -> DataFrame:
@@ -53,14 +52,9 @@ class Extractor:
         return self.spark.sql(query)
 
     def _scan(self, key: str) -> DataFrame:
-        """The table's parquet relation, read once per Extractor: each
-        `spark.read.parquet` runs its own schema-inference job, and both
-        eztravel extracts scan one table."""
-        if key not in self._scans:
-            self._scans[key] = self.spark.read.parquet(
-                os.path.join(self.base_dir, f"{self.tables[key]}.parquet")
-            )
-        return self._scans[key]
+        """The table's parquet relation; `load_table` caches it, so both
+        eztravel extracts share one scan."""
+        return load_table(self.spark, self.base_dir, self.tables[key])
 
     def _supplier(self, key: str) -> DataFrame:
         """Shared supplier shape (etl/extractor.py:70-89,109-121):

@@ -1,20 +1,25 @@
-"""Parquet sources.
+"""Parquet sources: the one place that decides how a lake table is opened.
 
 The reference's sources are BigQuery SQL scans with filter + DISTINCT pushed
 into the source text (reference etl/extractor.py:42-121). Spark-first this is
-simply `spark.read.parquet(...)` + declarative `.filter/.distinct` — Catalyst
-pushes predicates and column pruning into the parquet scan, which is the same
-"compute at the source" rewrite done by hand in the reference (S1/S2 in
-SURVEY.md §2.1).
+a parquet scan + declarative `.filter/.distinct` — Catalyst pushes predicates
+and column pruning into the scan, the same "compute at the source" rewrite
+done by hand in the reference (S1/S2 in SURVEY.md §2.1).
+
+Every scan gets its schema from one parquet footer read on the driver
+(`table_read_schema`), so opening a table runs no schema-inference job;
+batch reads (`load_table`) and file streams share that schema.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, MapType, StructField, StructType, TimestampNTZType
 
 TPCH_TABLES = (
     "region",
@@ -30,24 +35,58 @@ TPCH_TABLES = (
 )
 
 
+# Spark's writer stores its Catalyst schema here; Spark's inference prefers it.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str):
+    """The arrow schema (with footer key-value metadata) of a parquet file,
+    or of the first data file of a Spark-written directory — Spark's
+    listing skips names starting with `_` or `.` (_SUCCESS, .crc)."""
+    if os.path.isdir(path):
+        data = sorted(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+        if not data:
+            raise FileNotFoundError(f"no parquet data file in {path}")
+        path = os.path.join(path, data[0])
+    return pq.read_schema(path)
+
+
+def _nullable(t):
+    """Spark's `asNullable`: file-source schemas are nullable all the way
+    down, whatever the writer declared."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
+
+
 def table_read_schema(sf_dir: str, name: str):
-    """(spark_schema, ns_cols) for a table — ns-timestamp columns declared
-    LONG so the schema is legal for spark.read AND spark.readStream (the
-    file-stream source hits the same TIMESTAMP(NANOS) rejection as batch).
-    Callers convert ns_cols with timestamp_micros(col div 1000)."""
+    """(spark_schema, ns_cols) for `<sf_dir>/<name>.parquet`, a file or a
+    Spark-written directory: the schema `spark.read.parquet` would infer
+    (a naive timestamp is TIMESTAMP_NTZ), read from one footer, no job.
+    TIMESTAMP(NANOS) columns, which Spark's reader rejects, are declared
+    LONG (legal for spark.read AND spark.readStream) and listed in
+    ns_cols; callers convert them with timestamp_micros(col div 1000)."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    file_schema = pq.read_schema(path)
+    file_schema = _footer_schema(os.path.join(sf_dir, f"{name}.parquet"))
+    spark_json = (file_schema.metadata or {}).get(_SPARK_ROW_METADATA)
+    if spark_json is not None:
+        return _nullable(StructType.fromJson(json.loads(spark_json))), []
     ns_cols = [f.name for f in file_schema if str(f.type) == "timestamp[ns]"]
     as_long = pa.schema(
         [
-            pa.field(f.name, pa.int64()) if str(f.type) == "timestamp[ns]" else f
+            pa.field(f.name, pa.int64()) if f.name in ns_cols else f
             for f in file_schema
         ]
     )
-    return from_arrow_schema(as_long), ns_cols
+    return _nullable(from_arrow_schema(as_long, prefer_timestamp_ntz=True)), ns_cols
 
 
 # (appId, path, mtime_ns, size) -> DataFrame. A DataFrame is an immutable
@@ -61,12 +100,13 @@ _TABLE_CACHE: dict[tuple, DataFrame] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table. Filters/projections applied by the caller reach the
-    scan via Catalyst pushdown — check `.explain` for PushedFilters.
+    """Scan one table with the schema `table_read_schema` reads from its
+    footer. Filters/projections applied by the caller reach the scan via
+    Catalyst pushdown — check `.explain` for PushedFilters.
 
-    Spark's parquet reader rejects TIMESTAMP(NANOS) columns; those are read
-    as nano-longs (`nanosAsLong`) and converted to microsecond timestamps —
-    the same ns -> us truncation DuckDB applies, keeping oracle parity.
+    TIMESTAMP(NANOS) columns arrive as nano-longs and are converted to
+    microsecond timestamps — the same ns -> us truncation DuckDB applies,
+    keeping oracle parity.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
@@ -81,10 +121,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # flag would silently change how OTHER parquet reads in the same
     # session surface ns timestamps.
     schema, ns_cols = table_read_schema(sf_dir, name)
-    if ns_cols:
-        df = spark.read.schema(schema).parquet(path)
-    else:
-        df = spark.read.parquet(path)
+    df = spark.read.schema(schema).parquet(path)
     for c in ns_cols:
         # `div` = integer division on longs (a double division would lose
         # precision on 63-bit nano values)
@@ -114,8 +151,6 @@ def _ntz_to_ltz(df: DataFrame) -> DataFrame:
     semantics, so downstream operators see ONE timestamp type regardless of
     which writer produced the file. Done here, at the single shared scan
     entry point, so no operator needs its own defense."""
-    from pyspark.sql.types import TimestampNTZType
-
     ntz = [f.name for f in df.schema.fields if isinstance(f.dataType, TimestampNTZType)]
     for c in ntz:
         df = df.withColumn(c, F.col(c).cast("timestamp"))

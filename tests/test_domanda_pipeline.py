@@ -176,16 +176,21 @@ def test_refresh_compiles_without_fallback(spark, tmp_path):
     leg and column populated, unlike the constant-folded registry frames)
     compiles every whole stage: with spark.sql.codegen.fallback=false a
     generated-code compile failure (janino's 64 KB method limit) throws
-    instead of falling back to interpreted execution."""
+    instead of falling back to interpreted execution. Building the six
+    source frames runs no Spark job: each scan takes its schema from the
+    parquet footer instead of a schema-inference job."""
     from perfbench import lake
 
     from domanda_etl_spark.sources.extractors import Extractor
+    from tests.test_read_contract import jobs_during
 
     lake.generate(str(tmp_path), 7, 200)
     ex = Extractor(spark, str(tmp_path), lake.CUTOFF_EPOCH)
-    src = [ex.extract_cola_data(), ex.extract_set_data(), ex.extract_lion_data(),
-           ex.extract_eztravel_data(), ex.extract_foreign_supplier_eztravel_data(),
-           ex.extract_rich_data()]
+    src, jobs = jobs_during(spark, lambda: [
+        ex.extract_cola_data(), ex.extract_set_data(), ex.extract_lion_data(),
+        ex.extract_eztravel_data(), ex.extract_foreign_supplier_eztravel_data(),
+        ex.extract_rich_data()])
+    assert jobs == 0, f"building the source frames ran {jobs} Spark jobs"
     prev = spark.conf.get("spark.sql.codegen.fallback")
     spark.conf.set("spark.sql.codegen.fallback", "false")
     try:

@@ -74,8 +74,9 @@ def build_doc_replicas(docs, replicas: int):
 
 
 def build():
-    # single-FILE parquet, matching /root/testdata's layout (the repo's
-    # table_read_schema reads footer schema via pq.read_schema(path))
+    # single-FILE parquet, matching the sf fixtures' layout (load_table
+    # reads a file or a Spark-written directory alike, schema from the
+    # footer)
     import pyarrow as pa
     import pyarrow.parquet as pq
 
