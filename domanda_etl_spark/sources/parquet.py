@@ -89,10 +89,12 @@ def table_read_schema(sf_dir: str, name: str):
     return _nullable(from_arrow_schema(as_long, prefer_timestamp_ntz=True)), ns_cols
 
 
-# (appId, path, mtime_ns, size) -> DataFrame. A DataFrame is an immutable
-# lazy plan, so handing the same object to every caller is safe; the
-# mtime/size key invalidates on rewrite, and the appId key scopes the
-# entry to one SparkSession. Why: each uncached load_table costs ~70 ms
+# (appId, path, mtime_ns, size, session time zone) -> DataFrame. A
+# DataFrame is an immutable lazy plan, so handing the same object to every
+# caller is safe; the mtime/size key invalidates on rewrite, the appId key
+# scopes the entry to one SparkSession, and the time zone key keeps a plan
+# whose NTZ -> LTZ cast (`_ntz_to_ltz`) was resolved in another zone from
+# meaning another instant. Why: each uncached load_table costs ~70 ms
 # (Python footer read + JVM DataFrameReader listing/schema) and the bench
 # calls it 1-3x per query x 300+ queries — tens of seconds of pure
 # re-listing of files that never change.
@@ -111,7 +113,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         st = os.stat(path)
-        key = (spark.sparkContext.applicationId, path, st.st_mtime_ns, st.st_size)
+        key = (
+            spark.sparkContext.applicationId,
+            path,
+            st.st_mtime_ns,
+            st.st_size,
+            spark.conf.get("spark.sql.session.timeZone"),
+        )
     except OSError:
         key = None
     if key is not None and key in _TABLE_CACHE:
@@ -128,11 +136,11 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     df = _ntz_to_ltz(df)
     if key is not None:
-        # Evict superseded entries for the same file (old mtime/size) so a
-        # rewrite-heavy process doesn't accumulate dead plans, and so no
-        # other cache may safely alias a stale DataFrame object for this
-        # path (e.g. by object identity).
-        stale = [k for k in _TABLE_CACHE if k[:2] == key[:2] and k != key]
+        # Evict superseded entries for the same file (old mtime/size, any
+        # time zone) so a rewrite-heavy process doesn't accumulate dead
+        # plans, and so no other cache may safely alias a stale DataFrame
+        # object for this path (e.g. by object identity).
+        stale = [k for k in _TABLE_CACHE if k[:2] == key[:2] and k[2:4] != key[2:4]]
         for k in stale:
             del _TABLE_CACHE[k]
         _TABLE_CACHE[key] = df

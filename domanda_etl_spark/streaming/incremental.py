@@ -97,68 +97,6 @@ def stateful_running_totals(stream: DataFrame, key_col: str, value_col: str) -> 
     )
 
 
-def transform_with_state_totals(
-    stream: DataFrame, key_col: str, value_col: str
-) -> DataFrame:
-    """Per-key running (count, sum) via Spark 4's transformWithStateInPandas
-    — the successor API to applyInPandasWithState (typed value/list/map
-    state handles, timers, TTL) and the template this module would migrate
-    `stateful_running_totals` to on a cluster. Semantics match
-    stateful_running_totals exactly: integer-cents accumulation, one
-    updated row per key per micro-batch.
-
-    ENVIRONMENT-GATED: the TWS Python state server speaks protobuf to the
-    JVM, and `google.protobuf` is not installed in this container (same
-    class of block as the pre-round-7 image codecs) — raises ImportError
-    with that diagnosis if protobuf is missing. Requires the RocksDB state
-    store provider (`spark.sql.streaming.stateStore.providerClass`).
-    Covered by a capability-gated test (tests/test_streaming.py) that
-    exercises it for real wherever protobuf exists."""
-    import importlib.util
-
-    if importlib.util.find_spec("google") is None or importlib.util.find_spec(
-        "google.protobuf"
-    ) is None:
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server wire protocol); not installed in this environment"
-        )
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    class _RunningTotals(StatefulProcessor):
-        def init(self, handle):
-            schema = StructType(
-                [StructField("n", LongType()), StructField("total", LongType())]
-            )
-            self._state = handle.getValueState("totals", schema)
-
-        def handleInputRows(self, key, rows, timer_values):
-            n, total = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                n += len(pdf)
-                total += int(pdf["cents"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"key": [key[0]], "n": [n], "total": [total]}
-            )
-
-        def close(self):
-            pass
-
-    renamed = stream.select(
-        F.col(key_col).cast("string").alias("key"),
-        F.col(value_col).alias("cents"),
-    )
-    return renamed.groupBy("key").transformWithStateInPandas(
-        statefulProcessor=_RunningTotals(),
-        outputStructType="key string, n long, total long",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def foreach_batch_latest_wins_overwrite(
     table: VersionedTable, version_col: str, key_cols: list[str] | None = None
 ):

@@ -104,6 +104,31 @@ def test_batch_and_stream_schema_read_one_instant(spark, tmp_path):
         spark.conf.set("spark.sql.session.timeZone", prev)
 
 
+def test_cached_table_follows_the_session_time_zone(spark, tmp_path):
+    """A table loaded under one session time zone and read again under
+    another means the instant a fresh read in the new zone means: the
+    NTZ -> LTZ cast is resolved at analysis, so the cache keys on the
+    zone. Switching back finds the first zone's frame still cached."""
+    for d in ("cached", "fresh"):
+        os.mkdir(tmp_path / d)
+        shutil.copy(os.path.join(ORACLE_SF_DIR, "events.parquet"), tmp_path / d)
+    cached, fresh = str(tmp_path / "cached"), str(tmp_path / "fresh")
+
+    def instants(base):
+        df = load_table(spark, base, "events")
+        return sorted(df.select("event_id", F.unix_micros("ts")).collect())
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        utc_frame = load_table(spark, cached, "events")
+        spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+        assert instants(cached) == instants(fresh)
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        assert load_table(spark, cached, "events") is utc_frame
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
 
 def test_tw_cache_entry_dies_with_its_frame(spark, tmp_path):
     """`_tw` caches per `load_table` frame under a weak key: the same

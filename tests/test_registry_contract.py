@@ -1,8 +1,9 @@
 """Registry/window contract guards (VERDICT r9 ask #6).
 
 The import-time raise in q() covers duplicate REGISTRATION; these cover
-the _FIRST50 driver-window list itself, so a window typo becomes a test
-failure instead of a silently shorter CORRECTNESS file.
+the _FIRST50 driver window that `tools/backlog.py --freeze` composes and
+the entry file reads back, so a bad window becomes a test failure
+instead of a silently shorter CORRECTNESS file.
 """
 
 from __future__ import annotations
@@ -71,6 +72,36 @@ def test_window_freeze_covers_all_edits():
         "queries modified (or added) after the window froze but NOT in "
         f"_FIRST50 — re-window and re-freeze: {drifted}"
     )
+
+
+def test_compose_window(monkeypatch):
+    """`compose` over a synthetic registry: flagship, then the drifted
+    queries stalest first, then the previous window, then the rest of the
+    registry stalest first; unregistered names dropped, cut at 50."""
+    from types import SimpleNamespace
+
+    from tools import backlog as B
+
+    names = [B.FLAGSHIP] + [f"q{i:03d}" for i in range(120)]
+    monkeypatch.setattr(B, "entrymod", SimpleNamespace(_REGISTRY=dict.fromkeys(names)))
+    last = {n: 1 + i % 7 for i, n in enumerate(names)}  # latest round 1..7
+    del last["q006"], last["q013"]  # never checked
+
+    first = B.compose([], [], last)
+    assert first[0] == B.FLAGSHIP and len(first) == 50
+    assert first[1:3] == ["q006", "q013"]
+
+    # rounds: q006 never, q050 3, q100 4
+    w = B.compose(["q100", "q050", "q006", "gone"], first + ["gone"], last)
+    assert w[:4] == [B.FLAGSHIP, "q006", "q050", "q100"]
+    assert w[4:] == [n for n in first if n not in w[:4]][:46]  # previous window carried
+    assert "gone" not in w and len(w) == 50
+    assert B.compose([], w, last) == w  # nothing drifted: unchanged
+
+    # overflow: 70 drifted, the 49 stalest win
+    many = names[1:71]
+    over = B.compose(many, w, last)
+    assert over[1:] == sorted(many, key=lambda n: (last.get(n, 0), n))[:49]
 
 
 def test_freeze_hash_sees_package_helper_edits(tmp_path, monkeypatch):

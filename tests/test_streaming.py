@@ -146,81 +146,3 @@ def test_stream_dedup_latest_wins_sink(spark, tmp_path):
     out = {r["key"]: r for r in table.read(spark).collect()}
     assert set(out) == {1, 2, 3}
     assert out[1]["value"] == 999.0  # latest ts won across micro-batches
-
-
-def test_transform_with_state_totals(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas running totals — capability-gated:
-    the TWS state server needs google.protobuf, absent in this container,
-    so here we assert the gate raises the diagnostic ImportError; where
-    protobuf exists the same body runs the real stream/batch equivalence
-    (mirroring test_stateful_running_totals)."""
-    import importlib.util
-    import tempfile
-
-    from domanda_etl_spark.streaming.incremental import (
-        transform_with_state_totals,
-    )
-
-    have_protobuf = (
-        importlib.util.find_spec("google") is not None
-        and importlib.util.find_spec("google.protobuf") is not None
-    )
-    sf = "/root/testdata/sf0.001"
-    from domanda_etl_spark.sources.parquet import table_read_schema
-
-    schema, _ns = table_read_schema(sf, "events")
-    stream = (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf)
-        .select(
-            F.col("user_id").alias("user_id"),
-            F.round(F.col("value") * 100).cast("long").alias("cents"),
-        )
-    )
-    if not have_protobuf:
-        with pytest.raises(ImportError, match="protobuf"):
-            transform_with_state_totals(stream, "user_id", "cents")
-        return
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        out = transform_with_state_totals(stream, "user_id", "cents")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_totals_test")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(240)
-        from pyspark.sql import Window
-
-        w = Window.partitionBy("key").orderBy(F.col("n").desc())
-        final = (
-            spark.table("tws_totals_test")
-            .withColumn("rn", F.row_number().over(w))
-            .filter("rn = 1")
-            .select("key", "n", "total")
-        )
-        batch = (
-            spark.read.schema(schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf)
-            .groupBy(F.col("user_id").cast("string").alias("key"))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.round(F.col("value") * 100).cast("long")).alias("total"),
-            )
-        )
-        assert final.exceptAll(batch).count() == 0
-        assert batch.exceptAll(final).count() == 0
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )

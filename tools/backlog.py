@@ -1,46 +1,26 @@
-"""Print the driver-verification backlog AND the evidence-age ranking
-that drives the staleness-first window rotation (policy documented next
-to `_FIRST50` in __spark_entry__.py, adopted round 11 per VERDICT r10
-§next#1):
+"""The driver window and the freeze stamps: one file, one writer.
 
-- backlog: registered queries never seen in any CORRECTNESS_r*.json and
-  not in the current _FIRST50 window (must reach zero every round);
-- age report: for every registered query, the LATEST round it appeared
-  in a driver window, sorted oldest-first (ties alphabetical) — the
-  window's slot-(c) candidates are read straight off the top.
+The driver checks the first 50 names `queries()` yields against DuckDB.
+That window, and a sha256 stamp per registry query, live together in
+WINDOW_FREEZE.json; `__spark_entry__.py` reads the window back at import.
 
-Usage: python tools/backlog.py [--ages N]   (N = rows to print, def 60)
-       python tools/backlog.py --freeze     (stamp WINDOW_FREEZE.json)
-       python tools/backlog.py --drift      (queries whose stamp drifted:
-                                             the policy-(b) window set)
+Usage: python tools/backlog.py --freeze   (compose the window, re-stamp,
+                                           print what entered and left)
+       python tools/backlog.py --drift    (queries whose stamp drifted)
 
---freeze records a sha256 of every registry query's SOURCE + ORACLE +
-TRANSITIVE HELPER CODE at window-composition time into
-WINDOW_FREEZE.json.  The companion test
-(tests/test_registry_contract.py::test_window_freeze_covers_all_edits)
-fails when any query's hash differs from the stamp and the query is NOT
-in _FIRST50 — the r8/r14 lesson, mechanized (VERDICT r14 §next#1: 8
-family queries were re-planned AFTER the r14 window froze, so the round
-closed with no driver hash on the shipped plans).  Re-run --freeze after
-every window edit; the diff of WINDOW_FREEZE.json shows exactly which
-queries changed since the last freeze.
-
-The stamp covers MORE than the registry function's own text (VERDICT
-r15 §next#1: the r15 LPA pins landed in operators/graph.py while the
-registry source was untouched, so the old getsource-only hash could not
-see the re-plan).  Per query it now folds in, resolved by AST over the
-entry module:
+A stamp is a sha256 of the query's source + oracle SQL + the code its
+plan transitively depends on, resolved by AST over the entry module:
   - every domanda_etl_spark MODULE FILE the query's plan depends on —
     via the entry module's package-import aliases (S, T, dedup, ...),
     function-local `from domanda_etl_spark...` imports, and the
     package's own transitive intra-package imports;
   - every TOP-LEVEL entry-module helper (function or constant) the
-    query references, transitively — the same hole one file closer
-    (a shared `_t`/`_minhash` helper edit must drift its dependents).
-Editing operators/graph.py after a freeze therefore drifts exactly the
-graph-family stamps, and the contract test goes red until those queries
-are re-windowed (proven by tests/test_registry_contract.py::
-test_freeze_hash_sees_package_helper_edits against a mutated tmp copy).
+    query references, transitively.
+Editing operators/graph.py therefore drifts exactly the graph-family
+stamps (tests/test_registry_contract.py::
+test_freeze_hash_sees_package_helper_edits proves it on a mutated tmp
+copy), and test_window_freeze_covers_all_edits fails while any drifted
+query is outside the window, until the next --freeze puts it in.
 """
 
 from __future__ import annotations
@@ -54,16 +34,15 @@ import os
 import re
 import sys
 import textwrap
-from collections import Counter
 from functools import lru_cache
 from pathlib import Path
 
-sys.path.insert(0, ".")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
 
 FREEZE_FILE = "WINDOW_FREEZE.json"
-
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FLAGSHIP = "domanda_pipeline_full"
 # the package tree the file hashes are read from — tests point this at a
 # mutated tmp copy to prove helper edits drift the right stamps
 PKG_ROOT = os.path.join(REPO_ROOT, "domanda_etl_spark")
@@ -241,8 +220,7 @@ def _deps_of(src: str, root: str) -> tuple[frozenset[str], frozenset[str]]:
 def source_hash(name: str) -> str:
     """sha256 over the query's function source + oracle SQL + the hashes
     of every package module file and entry-module helper its plan
-    transitively depends on (see module docstring — the r15 freeze-hash
-    helper hole, closed)."""
+    transitively depends on (see the module docstring)."""
     fn, sql = entrymod._REGISTRY[name]
     src = inspect.getsource(fn)
     mods, helpers = _deps_of(src, PKG_ROOT)
@@ -260,61 +238,79 @@ def source_hash(name: str) -> str:
     return h.hexdigest()
 
 
+def _frozen() -> dict:
+    with open(os.path.join(REPO_ROOT, FREEZE_FILE)) as f:
+        return json.load(f)
+
+
+def compose(drifted: list[str], previous: list[str], last: dict[str, int]) -> list[str]:
+    """The driver window, in order:
+      1. the flagship `domanda_pipeline_full`, the regression guard over
+         the whole ETL surface, in every window;
+      2. every drifted query (added, or its stamp changed since the last
+         freeze), oldest driver evidence first, so it gets driver evidence
+         on the plan it ships with; when more than 49 drifted, the
+         stalest win and the rest stay under the full-registry parity
+         run of tests/test_oracle_parity.py;
+      3. the previous window in its order, which keeps an earlier
+         freeze's drifted queries in until the driver has run them;
+      4. the rest of the registry, oldest driver evidence first;
+    unregistered names dropped, cut at 50. Oldest evidence first means
+    by (latest CORRECTNESS round that checked it, 0 if none; name), so a
+    new query (no stamp, no evidence) comes first among the drifted.
+    Nothing drifted leaves a full window unchanged: compose([], W, last)
+    == W, so a second --freeze changes nothing."""
+    registry = entrymod._REGISTRY
+
+    def rank(n: str) -> tuple[int, str]:
+        return (last.get(n, 0), n)
+
+    order = [FLAGSHIP, *sorted(drifted, key=rank), *previous, *sorted(registry, key=rank)]
+    return [n for n in dict.fromkeys(order) if n in registry][:50]
+
+
 def freeze() -> None:
-    stamp = {n: source_hash(n) for n in sorted(entrymod._REGISTRY)}
-    with open(FREEZE_FILE, "w") as f:
-        json.dump(stamp, f, indent=0, sort_keys=True)
+    """Compose the window from the drift against the current stamps, then
+    write it with fresh stamps in one file write."""
+    previous = _frozen()["window"]
+    window = compose(drift(), previous, evidence_rounds())
+    stamps = {n: source_hash(n) for n in sorted(entrymod._REGISTRY)}
+    with open(os.path.join(REPO_ROOT, FREEZE_FILE), "w") as f:
+        json.dump({"window": window, "stamps": stamps}, f, indent=0, sort_keys=True)
         f.write("\n")
-    print(f"froze {len(stamp)} query hashes -> {FREEZE_FILE}")
+    print(f"froze {len(stamps)} query hashes and a {len(window)}-query window -> {FREEZE_FILE}")
+    entered = [n for n in window if n not in previous]
+    left = [n for n in previous if n not in window]
+    print(f"entered ({len(entered)}): {', '.join(entered)}")
+    print(f"left ({len(left)}): {', '.join(left)}")
 
 
 def drift() -> list[str]:
     """Registry queries (registration order) whose source_hash differs
-    from the WINDOW_FREEZE.json stamp, or that the stamp lacks."""
-    with open(os.path.join(REPO_ROOT, FREEZE_FILE)) as f:
-        stamp = json.load(f)
-    return [n for n in entrymod._REGISTRY if stamp.get(n) != source_hash(n)]
+    from their WINDOW_FREEZE.json stamp, or that have no stamp."""
+    stamps = _frozen()["stamps"]
+    return [n for n in entrymod._REGISTRY if stamps.get(n) != source_hash(n)]
 
 
 def evidence_rounds() -> dict[str, int]:
     """name -> latest CORRECTNESS round that checked it (0 = never)."""
     last: dict[str, int] = {}
-    for f in sorted(glob.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", f).group(1))
-        for k in json.load(open(f)):
-            last[k] = max(last.get(k, 0), rnd)
+    for f in sorted(glob.glob(os.path.join(REPO_ROOT, "CORRECTNESS_r*.json"))):
+        rnd = int(re.search(r"r(\d+)\.json$", f).group(1))
+        with open(f) as fh:
+            for k in json.load(fh):
+                last[k] = max(last.get(k, 0), rnd)
     return last
 
 
 def main() -> None:
     if "--freeze" in sys.argv:
         freeze()
-        return
-    if "--drift" in sys.argv:
+    elif "--drift" in sys.argv:
         for n in drift():
             print(n)
-        return
-    n_show = 60
-    if "--ages" in sys.argv:
-        n_show = int(sys.argv[sys.argv.index("--ages") + 1])
-    last = evidence_rounds()
-    names = list(entrymod.queries().keys())
-    window = set(entrymod._FIRST50)
-    ever = {n for n in names if last.get(n, 0) > 0}
-    backlog = [n for n in names if n not in ever and n not in window]
-    print(
-        f"registry={len(names)} ever-verified={len(ever)} "
-        f"window={len(window)} backlog={len(backlog)}"
-    )
-    if backlog:
-        print(textwrap.fill(", ".join(backlog), width=74))
-    dist = Counter(last.get(n, 0) for n in names)
-    print("evidence-round distribution:", dict(sorted(dist.items())))
-    ranked = sorted(names, key=lambda n: (last.get(n, 0), n))
-    print(f"oldest-evidence-first (top {n_show}; * = in current window):")
-    for n in ranked[:n_show]:
-        mark = "*" if n in window else " "
-        print(f"  r{last.get(n, 0):02d} {mark} {n}")
+    else:
+        sys.exit("usage: python tools/backlog.py --freeze | --drift")
 
 
 if __name__ == "__main__":

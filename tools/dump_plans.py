@@ -226,14 +226,15 @@ def build_registry(spark, sf_dir: str, names=None) -> dict[str, tuple[str, int]]
     jobs it ran while building). Jobs are the growth of the newest job id
     in the driver's status store, so jobs that streaming queries run on
     their own stream threads (outside the caller's job group) count too."""
+    from perfbench.meter import StatusStore
+
     qs = entrymod.queries()
-    jsc = spark.sparkContext._jsc.sc()
-    store = jsc.statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    store = StatusStore(spark)
 
     def newest_job() -> int:
-        jsc.listenerBus().waitUntilEmpty()
-        jobs = store.jobsList(None)
-        return jobs.apply(0).jobId() if jobs.size() else -1
+        bus.waitUntilEmpty()
+        return store.mark()[1]
 
     out = {}
     for name in names or qs:
