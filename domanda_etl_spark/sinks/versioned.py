@@ -17,6 +17,15 @@ The two sinks differ only in the file set a version entry holds:
 `VersionedTable` lists segments (`segments`), `PartitionedVersionedTable`
 maps partition value -> segments (`parts`, plus the version's schema).
 
+`VersionedTable.merge_upsert` is merge-on-read, O(delta) in reads and
+writes: it writes the update rows once as a new segment `u` and records
+`[u, keys]` in the entry's `upserts`. That segment is its own
+equality-delete set (Delta's deletion vectors, keyed instead of
+positional): a read of the version hides every row of an older segment
+whose keys equal a key of `u`, at the cost of one broadcast anti-join per
+distinct key list until `compact` folds the upserts away. A version
+without upserts reads through a plain scan.
+
 Single-writer semantics (matching the reference's advisory-lock discipline,
 etl/loader.py:169-174).
 """
@@ -148,9 +157,14 @@ class _VersionLog:
 
 
 class VersionedTable(_VersionLog):
-    """Each version entry lists the segments its rows live in."""
+    """Each version entry lists the segments its rows live in; a version
+    published by `merge_upsert` (or an append after one) also lists its
+    `upserts`, `[segment, keys]` pairs that mask older segments' rows."""
 
     _FILESET = "segments"
+    # the segment id of a scanned row: the `_s{n}` parent directory of its
+    # file, anchored so a `_s<n>` elsewhere in the table path cannot match
+    _SEG_OF_FILE = r"/_s(\d+)/[^/]+$"
 
     @staticmethod
     def _segments(entry: dict) -> list[int]:
@@ -175,21 +189,28 @@ class VersionedTable(_VersionLog):
         written (a fresh segment directory); the new version's manifest entry
         references the previous version's segments plus the new one —
         Delta-style copy-on-write at the FILE-SET level, so appending N rows
-        to a 100 TB table costs N rows of IO, not a full rewrite."""
+        to a 100 TB table costs N rows of IO, not a full rewrite. The
+        previous version's upserts carry over; they never mask the new
+        segment, whose id is greater than theirs."""
         m = self._read_manifest()
         seg = self._write_segment(df, m)
-        prev = [] if m["current"] is None else self._entry(m)["segments"]
-        return self._commit(m, "append", segments=[*prev, seg])
+        prev = {} if m["current"] is None else self._entry(m)
+        upserts = prev.get("upserts")
+        return self._commit(
+            m, "append", segments=[*prev.get("segments", []), seg],
+            **({"upserts": upserts} if upserts else {}),
+        )
 
     def compact(self, spark: SparkSession, target_partitions: int | None = None) -> int:
-        """OPTIMIZE / small-file compaction: after many O(delta) appends the
-        current version references many small segments; rewrite it into one
-        bin-packed segment and publish as a new version. Older versions keep
-        referencing the original segments (time travel intact) until
-        retention vacuums them. This rewrite is table-wide, O(table);
-        PartitionedVersionedTable has no compact because its merge_upsert
-        and delete_keys already leave each partition they touch in one
-        segment."""
+        """OPTIMIZE / small-file compaction: after many O(delta) appends and
+        merges the current version references many small segments and
+        upserts; rewrite its visible rows into one bin-packed segment and
+        publish that as a new version without upserts, so later reads are
+        plain scans again. Older versions keep referencing the original
+        segments (time travel intact) until retention vacuums them. This
+        rewrite is table-wide, O(table); PartitionedVersionedTable has no
+        compact because its merge_upsert and delete_keys already leave each
+        partition they touch in one segment."""
         df = self.read(spark)
         if target_partitions is not None:
             df = df.coalesce(target_partitions)
@@ -204,18 +225,24 @@ class VersionedTable(_VersionLog):
         replaced by the update, unmatched updates are inserted, everything
         else is carried over. Publishes ONE new version atomically.
 
-        Scale note: parquet copy-on-write makes a full-table merge O(table)
-        — inherent without deletion vectors. At 100 TB use
-        PartitionedVersionedTable.merge_upsert, which rewrites only the
-        affected partitions, or a format with merge-on-read. The operator
-        surface is the same either way."""
-        try:
-            current = self.read(spark)
-        except FileNotFoundError:
+        Merge-on-read, O(delta) in reads and writes: `updates` is evaluated
+        and written once, as a new segment `u`; the new version lists the
+        previous segments plus `u` and records `[u, keys]` in `upserts`.
+        Reads of that version hide each older-segment row whose `keys`
+        equal (plain equality: a NULL key part never matches) a key of the
+        rows `u` holds, so the retired keys are always those of the rows
+        actually written. Each read pays one broadcast anti-join per
+        distinct key list until `compact` folds the upserts away."""
+        m = self._read_manifest()
+        if m["current"] is None:
             return self.overwrite(updates)
-        kept = current.join(updates.select(*keys).distinct(), keys, "left_anti")
-        merged = kept.unionByName(updates, allowMissingColumns=True)
-        return self.overwrite(merged)
+        updates.select(*keys)  # a missing key column fails here, before any write
+        prev = self._entry(m)
+        seg = self._write_segment(updates, m)
+        return self._commit(
+            m, "merge", segments=[*prev["segments"], seg],
+            upserts=[*prev.get("upserts", []), [seg, list(keys)]],
+        )
 
     def delete_where(self, spark: SparkSession, condition) -> int:
         """Targeted row deletion (GDPR / right-to-be-forgotten): publishes a
@@ -230,12 +257,38 @@ class VersionedTable(_VersionLog):
 
     # ---------------- read / verification --------------------------------
     def read(self, spark: SparkSession, version: int | None = None) -> DataFrame:
-        segments = self._entry(self._read_manifest(), version)["segments"]
+        entry = self._entry(self._read_manifest(), version)
         # mergeSchema: appended segments may carry evolved schemas (the old
         # unionByName(allowMissingColumns=True) semantics, now at scan time)
-        return spark.read.option("mergeSchema", "true").parquet(
-            *[self._sdir(s) for s in segments]
+        df = spark.read.option("mergeSchema", "true").parquet(
+            *[self._sdir(s) for s in entry["segments"]]
         )
+        upserts = entry.get("upserts")
+        return self._mask(df, upserts) if upserts else df
+
+    def _mask(self, df: DataFrame, upserts: list[list]) -> DataFrame:
+        """Hide the rows the upserts retire. The key sets come from the same
+        scan filtered to their segments (a second read would infer the
+        schema again); one broadcast left_anti join per distinct key list,
+        each retiring only rows of segments older than the upsert's."""
+        path = df.metadataColumn("_metadata").getField("file_path")
+        scan = df.withColumn("__seg", F.regexp_extract(path, self._SEG_OF_FILE, 1).cast("int"))
+        by_keys: dict[tuple[str, ...], list[int]] = {}
+        for seg, keys in upserts:
+            by_keys.setdefault(tuple(keys), []).append(seg)
+        df = scan
+        for keys, segs in by_keys.items():
+            # from the unmasked scan: an upsert retires keys of all the rows
+            # it wrote, also those a later upsert hides
+            dels = scan.filter(F.col("__seg").isin(segs)).select(
+                *[F.col(k).alias(f"__k{i}") for i, k in enumerate(keys)],
+                F.col("__seg").alias("__u"),
+            )
+            cond = F.col("__seg") < F.col("__u")
+            for i, k in enumerate(keys):
+                cond = cond & (F.col(k) == F.col(f"__k{i}"))
+            df = df.join(F.broadcast(dels), cond, "left_anti")
+        return df.drop("__seg")
 
     def verify_write(self, spark: SparkSession, predicates: dict[str, object]) -> bool:
         """S9 post-write verification read: point query on equality

@@ -376,7 +376,7 @@ def test_versioned_table_matches_dict_model(spark, tmp_path_factory, max_version
             live, segs = live + rows, segs + [next_seg]
         elif op == "merge":
             got_v = t.merge_upsert(spark, df, ["id"])
-            live, segs = [r for r in live if r[0] not in batch] + rows, [next_seg]
+            live, segs = [r for r in live if r[0] not in batch] + rows, segs + [next_seg]
         else:
             got_v = t.compact(spark)
             segs = [next_seg]
@@ -431,6 +431,31 @@ def test_merge_upsert_single_evaluation(spark, tmp_path_factory):
         t.merge_upsert(spark, upd, ["id"])
         got = tuple(sorted(map(tuple, t.read(spark).select("id", "g", "v").collect())))
         assert got in valid, f"trial {trial}: inconsistent commit {got}"
+
+
+def test_versioned_merge_upsert_single_evaluation(spark, tmp_path_factory):
+    """VersionedTable.merge_upsert must evaluate a NONDETERMINISTIC
+    `updates` once: the rows it retires are exactly those under the keys of
+    the rows it wrote. The update's key is drawn fresh on every evaluation
+    (nondeterministic UDF), so a merge that reads the feed once for the
+    keys to retire and again for the rows to write can retire one key and
+    write the other."""
+    import os as _os
+
+    from pyspark.sql.types import LongType
+
+    from domanda_etl_spark.sinks import VersionedTable
+
+    pick = F.udf(lambda: 1 + _os.urandom(1)[0] % 2, LongType()).asNondeterministic()
+    for trial in range(6):
+        t = VersionedTable(str(tmp_path_factory.mktemp(f"vpin{trial}")))
+        t.overwrite(spark.createDataFrame([(1, 0), (2, 0)], "id long, v long"))
+        upd = spark.createDataFrame([(9,)], "v long").select(pick().alias("id"), "v")
+        t.merge_upsert(spark, upd, ["id"])
+        got = set(map(tuple, t.read(spark).select("id", "v").collect()))
+        written = {i for i, v in got if v == 9}
+        retired = {1, 2} - {i for i, v in got if v == 0}
+        assert len(written) == 1 and retired == written, f"trial {trial}: {sorted(got)}"
 
 
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))

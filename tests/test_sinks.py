@@ -152,6 +152,125 @@ def test_merge_upsert(spark, table):
     assert t2.read(spark).count() == 2
 
 
+def test_merge_is_o_delta(spark, table):
+    """A merge writes ONLY the update rows: the base segment's files are
+    untouched, the new segment holds exactly the updates, and the merge
+    commits without reading the base segment at all."""
+    import os
+
+    table.overwrite(df_of(spark, *range(100)))
+    base_dir = table._sdir(0)
+    files = sorted(f for f in os.listdir(base_dir) if f.endswith(".parquet"))
+    before = {f: os.path.getmtime(os.path.join(base_dir, f)) for f in files}
+    updates = spark.createDataFrame([(5, "UPDATED"), (100, "name100")], "id int, name string")
+    table.merge_upsert(spark, updates, ["id"])
+    after = {f: os.path.getmtime(os.path.join(base_dir, f)) for f in files}
+    assert before == after, "merge rewrote base-segment files (O(table) merge)"
+    written = {(r["id"], r["name"]) for r in spark.read.parquet(table._sdir(1)).collect()}
+    assert written == {(5, "UPDATED"), (100, "name100")}
+    assert table.read(spark).count() == 101
+    # a merge never reads the table: it commits with the base unreadable
+    for f in files:
+        with open(os.path.join(base_dir, f), "wb") as fh:
+            fh.write(b"not parquet")
+    v = table.merge_upsert(spark, df_of(spark, 7), ["id"])
+    assert table._read_manifest()["current"] == v == 2
+
+
+def cow_merge(live: list[dict], updates: list[dict], keys: list[str]) -> list[dict]:
+    """The copy-on-write MERGE reference: left_anti on `keys` by plain
+    equality (a NULL key part, or a key column the row lacks, never
+    matches), then every update row, duplicates included."""
+    hit = {
+        tuple(r[k] for k in keys)
+        for r in updates
+        if all(r.get(k) is not None for k in keys)
+    }
+    return [r for r in live if tuple(r.get(k) for k in keys) not in hit] + list(updates)
+
+
+def rows_of(df) -> list[tuple]:
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def model_rows(model: list[dict], columns: list[str]) -> list[tuple]:
+    return sorted((tuple(r.get(c) for c in columns) for r in model), key=repr)
+
+
+def test_merge_matches_copy_on_write_model(spark, tmp_path):
+    """Merge-on-read returns the copy-on-write rows at every version:
+    duplicate update keys all survive, a NULL key never retires a row, an
+    append after a merge is not masked by it but a later merge masks both,
+    and old versions, restore and compact read each entry's own upserts."""
+    t = VersionedTable(str(tmp_path / "cow"), max_versions=9)
+    schema = "id int, name string"
+    cols = ["id", "name"]
+
+    def load(op, data, keys=None):
+        df = spark.createDataFrame(data, schema)
+        model = [dict(zip(cols, r)) for r in data]
+        current = versions.get(t._read_manifest()["current"], [])
+        if op == "overwrite":
+            v, live = t.overwrite(df), model
+        elif op == "append":
+            v, live = t.append(df), current + model
+        else:
+            v, live = t.merge_upsert(spark, df, keys), cow_merge(current, model, keys)
+        versions[v] = live
+        assert rows_of(t.read(spark)) == model_rows(live, cols), op
+        return v
+
+    versions: dict[int, list[dict]] = {}
+    v0 = load("overwrite", [(1, "a"), (2, "b"), (3, "c"), (None, "n")])
+    v1 = load("merge", [(2, "B"), (2, "B2"), (None, "N"), (9, "z")], ["id"])
+    load("append", [(2, "app")])
+    v3 = load("merge", [(2, "M")], ["id"])
+    assert rows_of(t.read(spark, v0)) == model_rows(versions[v0], cols)
+    assert rows_of(t.read(spark, v1)) == model_rows(versions[v1], cols)
+    t.restore(spark, v1)
+    assert rows_of(t.read(spark)) == model_rows(versions[v1], cols)
+    assert t.history()[0]["upserts"] == [[1, ["id"]], [3, ["id"]]]  # v3's, untouched
+    assert rows_of(t.read(spark, v3)) == model_rows(versions[v3], cols)
+    vc = t.compact(spark)
+    entry = t._entry(t._read_manifest(), vc)
+    assert len(entry["segments"]) == 1 and "upserts" not in entry
+    assert rows_of(t.read(spark)) == model_rows(versions[v1], cols)
+
+
+def test_merge_null_key_part_retires_nothing(spark, table):
+    """Compound keys match by plain equality: a row and an update that
+    share a NULL key part are both kept, as the left_anti join kept them."""
+    schema, cols, keys = "id int, name string, v int", ["id", "name", "v"], ["id", "name"]
+    base = [(1, None, 0), (2, "b", 0)]
+    upd = [(1, None, 1), (2, "b", 1)]
+    table.overwrite(spark.createDataFrame(base, schema))
+    table.merge_upsert(spark, spark.createDataFrame(upd, schema), keys)
+    want = cow_merge([dict(zip(cols, r)) for r in base], [dict(zip(cols, r)) for r in upd], keys)
+    assert rows_of(table.read(spark)) == model_rows(want, cols)
+    assert (1, None, 0) in rows_of(table.read(spark))
+
+
+def test_merge_schema_evolution(spark, table):
+    """An update that adds a column evolves the read schema; a key column
+    the older segments lack reads as NULL there, so it retires none of
+    their rows."""
+    table.overwrite(df_of(spark, 1, 2))
+    live = [{"id": 1, "name": "name1"}, {"id": 2, "name": "name2"}]
+    schema, cols = "id int, name string, extra string", ["id", "name", "extra"]
+    for data, keys in (([(2, "B", "x")], ["id"]), ([(1, "A", "y")], ["id", "extra"])):
+        table.merge_upsert(spark, spark.createDataFrame(data, schema), keys)
+        live = cow_merge(live, [dict(zip(cols, r)) for r in data], keys)
+        got = table.read(spark)
+        assert got.columns == cols
+        assert rows_of(got) == model_rows(live, cols)
+    assert (1, "name1", None) in rows_of(table.read(spark))
+    # a key column the updates lack is refused before anything is written
+    before = table._read_manifest()
+    with pytest.raises(Exception, match="nope"):
+        table.merge_upsert(spark, df_of(spark, 3), ["nope"])
+    assert table._read_manifest() == before
+
+
 def test_compact_collapses_segments(spark, table):
     import os
 
@@ -205,14 +324,37 @@ def test_manifest_entry_keys_pinned(spark, tmp_path):
     parted = PartitionedVersionedTable(str(tmp_path / "parted"), "name")
     parted.overwrite(df_of(spark, 1))
     parted.merge_upsert(spark, df_of(spark, 2), ["id"])
+    # a merge records its upserts; an append carries them, compact drops them
+    merged = VersionedTable(str(tmp_path / "merged"), max_versions=4)
+    merged.overwrite(df_of(spark, 1))
+    merged.merge_upsert(spark, df_of(spark, 2), ["id"])
+    merged.append(df_of(spark, 3))
+    merged.compact(spark)
+    plain, upserted = ["id", "ts", "op", "segments"], ["id", "ts", "op", "segments", "upserts"]
+    parted_keys = ["id", "ts", "op", "parts", "schema"]
     for t, entry_keys in (
-        (flat, ["id", "ts", "op", "segments"]),
-        (parted, ["id", "ts", "op", "parts", "schema"]),
+        (flat, [plain, plain]),
+        (parted, [parted_keys, parted_keys]),
+        (merged, [plain, upserted, upserted, plain]),
     ):
         with open(os.path.join(t.path, "_manifest.json")) as f:
             m = json.load(f)
         assert {"current", "next_id", "next_seg", "versions"} <= set(m)
-        assert [list(e) for e in m["versions"]] == [entry_keys, entry_keys]
+        assert [list(e) for e in m["versions"]] == entry_keys
+    ops = [(e["op"], e.get("upserts")) for e in sorted(merged.history(), key=lambda e: e["id"])]
+    assert ops == [("overwrite", None), ("merge", [[1, ["id"]]]),
+                   ("append", [[1, ["id"]]]), ("compact", None)]
+
+
+def test_read_without_upserts_is_a_plain_scan(spark, table):
+    """A version no merge published reads through a bare scan: no join and
+    no `_metadata` column in its optimized plan; a merged version masks."""
+    table.overwrite(df_of(spark, 1))
+    v = table.append(df_of(spark, 2))
+    table.merge_upsert(spark, df_of(spark, 2), ["id"])
+    for version, masked in ((v, False), (None, True)):
+        plan = table.read(spark, version)._jdf.queryExecution().optimizedPlan().toString()
+        assert ("Join" in plan, "_metadata" in plan) == (masked, masked), plan
 
 
 def test_manifest_of_the_other_sink_rejected_loudly(spark, tmp_path):
