@@ -1,50 +1,71 @@
 """Multimodal column plumbing: image/audio/video as opaque binary columns
 with typed metadata.
 
-The Spark-side mechanics are real and tested — binary columns, Arrow-batched
-`mapInPandas` with explicit output schemas, partition-sized batches.  Image
-decode is REAL for PNG via the pure-stdlib codec in `png_codec` (zlib +
-scanline unfiltering; encode too, so round-trips are self-contained);
-formats that genuinely need a codec library the container does not ship
-(JPEG etc.) still raise NotImplementedError from `decode_image`, and the
-deterministic fake path is kept for the legacy fixtures.  Swapping
-PIL/libvips in changes one function, not the plumbing.
+Every operator is a per-row function run by `_map_rows`: the package is
+shipped to the Python workers, the input narrows to (id, value), and
+Arrow batches flow through `mapInPandas` with an explicit output schema,
+so the Python stage sees whole batches, never Spark rows.  Image decode
+is REAL for PNG via the pure-stdlib codec in `png_codec` (zlib +
+scanline unfiltering) and for baseline and progressive JPEG via
+`jpeg_codec` (Huffman + IDCT); both encode too, so round-trips are
+self-contained.  Formats that genuinely need a codec library the
+container does not ship raise NotImplementedError from `decode_image`.
+Swapping PIL/libvips in changes one function, not the plumbing.
 """
 
 from __future__ import annotations
 
+import hashlib
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_META_SCHEMA = "id bigint, byte_len bigint, prefix_hex string"
+from ..shipping import ensure_package_on_executors
+
+PAYLOAD = "payload"
+ENCODED_SCHEMA = f"id bigint, {PAYLOAD} binary"
+SAMPLE_RATE = 16000
 
 
-def with_binary_payload(df: DataFrame, text_col: str, out_col: str = "payload") -> DataFrame:
-    """Treat a string column as an opaque utf-8 binary payload (stand-in for
-    real media bytes in the test corpus)."""
-    return df.withColumn(out_col, F.encode(F.col(text_col), "UTF-8"))
-
-
-def media_metadata(df: DataFrame, id_col: str, payload_col: str = "payload") -> DataFrame:
-    """Byte-level metadata via Arrow-batched mapInPandas: (id, byte_len,
-    prefix_hex of the first 4 bytes — where a magic-number sniffer would
-    run). The Python stage sees whole Arrow batches, never Python rows."""
+def _map_rows(df: DataFrame, id_col: str, in_col: str, schema: str, rows) -> DataFrame:
+    """Arrow-batched mapInPandas over the (id_col, in_col) pairs of `df`:
+    `rows(id, value)` yields output tuples in `schema` order, zero or more
+    per input row (frame extraction fans out).  The per-row functions
+    touch module-level package functions, which cloudpickle ships BY
+    REFERENCE, so the package must be importable inside the Python
+    workers (ensure_package_on_executors = programmatic --py-files; a
+    vanilla driver session has no repo on its worker path)."""
+    ensure_package_on_executors(df.sparkSession)
+    columns = [field.split()[0] for field in schema.split(",")]
 
     def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            payload = pdf[payload_col]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "byte_len": payload.map(len).astype("int64"),
-                    "prefix_hex": payload.map(lambda b: bytes(b)[:4].hex().upper()),
-                }
-            )
+            out = [t for i, v in zip(pdf[id_col], pdf[in_col]) for t in rows(i, v)]
+            yield pd.DataFrame(out, columns=columns)
 
-    return df.select(id_col, payload_col).mapInPandas(compute, MEDIA_META_SCHEMA)
+    return df.select(id_col, in_col).mapInPandas(compute, schema)
+
+
+def with_binary_payload(df: DataFrame, text_col: str) -> DataFrame:
+    """Treat a string column as an opaque utf-8 binary `payload` column
+    (stand-in for real media bytes in the test corpus)."""
+    return df.withColumn(PAYLOAD, F.encode(F.col(text_col), "UTF-8"))
+
+
+MEDIA_META_SCHEMA = "id bigint, byte_len bigint, prefix_hex string"
+
+
+def media_metadata(df: DataFrame, id_col: str) -> DataFrame:
+    """Byte-level metadata of each payload: (id, byte_len, prefix_hex of
+    the first 4 bytes — where a magic-number sniffer would run)."""
+
+    def rows(i, b):
+        yield i, len(b), bytes(b)[:4].hex().upper()
+
+    return _map_rows(df, id_col, PAYLOAD, MEDIA_META_SCHEMA, rows)
 
 
 FRAME_SCHEMA = "id bigint, frame_idx int, frame_len int, frame_md5 string"
@@ -53,55 +74,38 @@ FRAME_SCHEMA = "id bigint, frame_idx int, frame_len int, frame_md5 string"
 def frame_extract(
     df: DataFrame,
     id_col: str,
-    payload_col: str = "payload",
     frame_bytes: int = 256,
     stride: int = 1,
 ) -> DataFrame:
     """Audio/video frame sampling over opaque media bytes: chunk the payload
     into fixed `frame_bytes` frames, keep every `stride`-th one (keyframe
     sampling), fingerprint each (md5 over the frame's uppercase hex — a
-    cross-engine-stable stand-in for a perceptual hash). Same Arrow-batched
-    mapInPandas plumbing as `media_metadata`; a real decoder (ffmpeg frame
-    grab, PCM windowing) replaces only the inner loop. One input row fans
-    out to ceil(len/frame_bytes)/stride output rows — partition sizing must
-    account for the multiplier, exactly like real frame extraction."""
-    import hashlib
+    cross-engine-stable stand-in for a perceptual hash). A real decoder
+    (ffmpeg frame grab, PCM windowing) replaces only the per-row function.
+    One input row fans out to ceil(len/frame_bytes)/stride output rows —
+    partition sizing must account for the multiplier, exactly like real
+    frame extraction."""
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            lens: list[int] = []
-            digests: list[str] = []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                bb = bytes(b)
-                n_frames = (len(bb) + frame_bytes - 1) // frame_bytes
-                for fi in range(0, n_frames, stride):
-                    fr = bb[fi * frame_bytes : (fi + 1) * frame_bytes]
-                    ids.append(i)
-                    idxs.append(fi)
-                    lens.append(len(fr))
-                    digests.append(hashlib.md5(fr.hex().upper().encode()).hexdigest())
-            yield pd.DataFrame(
-                {"id": ids, "frame_idx": idxs, "frame_len": lens, "frame_md5": digests}
-            )
+    def rows(i, b):
+        bb = bytes(b)
+        n_frames = (len(bb) + frame_bytes - 1) // frame_bytes
+        for fi in range(0, n_frames, stride):
+            fr = bb[fi * frame_bytes : (fi + 1) * frame_bytes]
+            yield i, fi, len(fr), hashlib.md5(fr.hex().upper().encode()).hexdigest()
 
-    return df.select(id_col, payload_col).mapInPandas(compute, FRAME_SCHEMA)
+    return _map_rows(df, id_col, PAYLOAD, FRAME_SCHEMA, rows)
 
 
-def decode_image(payload: bytes, fake: bool = False) -> dict:
+def decode_image(payload: bytes) -> dict:
     """Image decode.  PNG payloads are decoded FOR REAL by the pure-
     stdlib codec in `png_codec` (zlib + scanline unfiltering), JPEG
     payloads — baseline AND progressive — by the pure-stdlib codec in
     `jpeg_codec` (Huffman + spectral selection/successive approximation
     + dequant + IDCT, 4:4:4/4:2:0, restart markers) — no media library
-    needed for either.  The deterministic fake path is kept for the
-    legacy fixtures.  Arithmetic-coded/lossless JPEG and other formats
+    needed for either.  Arithmetic-coded/lossless JPEG and other formats
     still raise (NotImplementedError names the mode); a real deployment
     swaps PIL/libvips in here without touching the mapInPandas
     plumbing."""
-    if fake:
-        return {"width": len(payload) % 1024, "height": (len(payload) * 7) % 1024, "mode": "FAKE"}
     if payload[:8] == b"\x89PNG\r\n\x1a\n":
         from .png_codec import decode_png
 
@@ -116,37 +120,6 @@ def decode_image(payload: bytes, fake: bool = False) -> dict:
     )
 
 
-IMAGE_FEATURES_SCHEMA = "id bigint, width int, height int, mode string"
-
-
-def image_features(df: DataFrame, id_col: str, payload_col: str = "payload", fake: bool = True) -> DataFrame:
-    """Decode-and-extract plumbing over mapInPandas with the stubbed codec.
-    Batch shape, schema, and partitioning are production-real.
-
-    The closure references module-level `decode_image`, which cloudpickle
-    ships BY REFERENCE — so the package must be importable inside the
-    Python workers (ensure_package_on_executors = programmatic
-    --py-files; a vanilla driver session has no repo on its worker
-    path)."""
-    from ..shipping import ensure_package_on_executors
-
-    ensure_package_on_executors(df.sparkSession)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_image(bytes(b), fake=fake) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mode": [f["mode"] for f in feats],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, IMAGE_FEATURES_SCHEMA)
-
-
 def encode_embedding_png(
     df: DataFrame, id_col: str, vec_col: str, side: int = 8
 ) -> DataFrame:
@@ -157,25 +130,14 @@ def encode_embedding_png(
     the quantization from the raw floats.  The per-row scanline filter
     cycles through all five PNG predictors (id % 5) so the decode path's
     every filter branch runs in production, not just in unit tests."""
-    import numpy as np
-
-    from ..shipping import ensure_package_on_executors
     from .png_codec import encode_png
 
-    ensure_package_on_executors(df.sparkSession)
+    def rows(i, vec):
+        a = np.asarray(vec, dtype=np.float64)
+        px = np.clip(np.floor((a + 1.0) * 127.5), 0, 255).astype(np.uint8)
+        yield i, encode_png(px.reshape(side, side), filter_type=int(i) % 5)
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, vec in zip(pdf[id_col], pdf[vec_col]):
-                a = np.asarray(vec, dtype=np.float64)
-                px = np.clip(np.floor((a + 1.0) * 127.5), 0, 255).astype(np.uint8)
-                payloads.append(
-                    encode_png(px.reshape(side, side), filter_type=int(i) % 5)
-                )
-            yield pd.DataFrame({"id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col, vec_col).mapInPandas(compute, "id bigint, payload binary")
+    return _map_rows(df, id_col, vec_col, ENCODED_SCHEMA, rows)
 
 
 def encode_embedding_jpeg(
@@ -197,33 +159,22 @@ def encode_embedding_jpeg(
     (spectral selection + successive approximation) carrying the same
     quantized spectrum — the decoded pixels, and therefore the oracle,
     are identical to the baseline payload's."""
-    import numpy as np
-
-    from ..shipping import ensure_package_on_executors
     from .jpeg_codec import encode_jpeg, encode_jpeg_progressive
 
-    ensure_package_on_executors(df.sparkSession)
+    def rows(i, vec):
+        a = np.asarray(vec, dtype=np.float64)[:4]
+        v = 64 + 2 * np.clip(np.floor((a + 1.0) * 31.5), 0, 63).astype(np.int64)
+        img = np.zeros((16, 16), dtype=np.uint8)
+        img[0:8, 0:8] = v[0]
+        img[0:8, 8:16] = v[1]
+        img[8:16, 0:8] = v[2]
+        img[8:16, 8:16] = v[3]
+        if progressive:
+            yield i, encode_jpeg_progressive(img)
+        else:
+            yield i, encode_jpeg(img, restart_interval=1 if int(i) % 3 == 0 else 0)
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i, vec in zip(pdf[id_col], pdf[vec_col]):
-                a = np.asarray(vec, dtype=np.float64)[:4]
-                v = 64 + 2 * np.clip(np.floor((a + 1.0) * 31.5), 0, 63).astype(np.int64)
-                img = np.zeros((16, 16), dtype=np.uint8)
-                img[0:8, 0:8] = v[0]
-                img[0:8, 8:16] = v[1]
-                img[8:16, 0:8] = v[2]
-                img[8:16, 8:16] = v[3]
-                if progressive:
-                    payloads.append(encode_jpeg_progressive(img))
-                else:
-                    payloads.append(
-                        encode_jpeg(img, restart_interval=1 if int(i) % 3 == 0 else 0)
-                    )
-            yield pd.DataFrame({"id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col, vec_col).mapInPandas(compute, "id bigint, payload binary")
+    return _map_rows(df, id_col, vec_col, ENCODED_SCHEMA, rows)
 
 
 JPEG_BLOCK_STATS_SCHEMA = (
@@ -232,45 +183,28 @@ JPEG_BLOCK_STATS_SCHEMA = (
 )
 
 
-def image_jpeg_block_stats(
-    df: DataFrame, id_col: str, payload_col: str = "payload"
-) -> DataFrame:
+def image_jpeg_block_stats(df: DataFrame, id_col: str) -> DataFrame:
     """Decode JPEG payloads with the real codec and reduce to exact
     per-quadrant means plus the whole-image pixel sum (oracle-
     recomputable for the DC-exact payloads of `encode_embedding_jpeg`;
     px_sum catches any single mis-decoded pixel)."""
-    from ..shipping import ensure_package_on_executors
 
-    ensure_package_on_executors(df.sparkSession)
+    def rows(i, b):
+        d = decode_image(bytes(b))
+        px = d["pixels"][:, :, 0].astype("int64")
+        yield (
+            int(i),
+            d["width"],
+            d["height"],
+            d["mode"],
+            int(px[0:8, 0:8].sum() // 64),
+            int(px[0:8, 8:16].sum() // 64),
+            int(px[8:16, 0:8].sum() // 64),
+            int(px[8:16, 8:16].sum() // 64),
+            int(px.sum()),
+        )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                d = decode_image(bytes(b))
-                px = d["pixels"][:, :, 0].astype("int64")
-                rows.append(
-                    (
-                        int(i),
-                        d["width"],
-                        d["height"],
-                        d["mode"],
-                        int(px[0:8, 0:8].sum() // 64),
-                        int(px[0:8, 8:16].sum() // 64),
-                        int(px[8:16, 0:8].sum() // 64),
-                        int(px[8:16, 8:16].sum() // 64),
-                        int(px.sum()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id", "width", "height", "mode",
-                    "b0", "b1", "b2", "b3", "px_sum",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, JPEG_BLOCK_STATS_SCHEMA)
+    return _map_rows(df, id_col, PAYLOAD, JPEG_BLOCK_STATS_SCHEMA, rows)
 
 
 def box_resize(pixels, factor: int):
@@ -278,8 +212,6 @@ def box_resize(pixels, factor: int):
     maps to floor(mean) — sum // factor², so an oracle can recompute the
     result in pure integer SQL.  pixels: HxWxC uint8, H and W divisible
     by factor."""
-    import numpy as np
-
     a = np.asarray(pixels, dtype=np.int64)
     h, w, ch = a.shape
     if h % factor or w % factor:
@@ -293,47 +225,31 @@ IMAGE_RESIZE_STATS_SCHEMA = (
 )
 
 
-def image_resize_stats(
-    df: DataFrame, id_col: str, payload_col: str = "payload", factor: int = 2
-) -> DataFrame:
+def image_resize_stats(df: DataFrame, id_col: str, factor: int = 2) -> DataFrame:
     """Decode → box-filter resize → exact stats, the resize leg of the
     multimodal brief: PNG payloads are decoded by the real codec,
     downsampled `factor`x with the integer box filter, and reduced to
     sum/min/max over the RESIZED pixels (oracle-recomputable)."""
-    from ..shipping import ensure_package_on_executors
 
-    ensure_package_on_executors(df.sparkSession)
+    def rows(i, b):
+        r = box_resize(decode_image(bytes(b))["pixels"], factor)
+        yield (
+            int(i),
+            r.shape[1],
+            r.shape[0],
+            int(r.astype("int64").sum()),
+            int(r.min()),
+            int(r.max()),
+        )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                d = decode_image(bytes(b))
-                r = box_resize(d["pixels"], factor)
-                rows.append(
-                    (
-                        int(i),
-                        r.shape[1],
-                        r.shape[0],
-                        int(r.astype("int64").sum()),
-                        int(r.min()),
-                        int(r.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["id", "width", "height", "rs_sum", "rs_min", "rs_max"]
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, IMAGE_RESIZE_STATS_SCHEMA)
+    return _map_rows(df, id_col, PAYLOAD, IMAGE_RESIZE_STATS_SCHEMA, rows)
 
 
-def encode_pcm_wav(samples, sample_rate: int = 16000) -> bytes:
+def encode_pcm_wav(samples, sample_rate: int = SAMPLE_RATE) -> bytes:
     """Write a real mono 16-bit PCM WAV (stdlib `wave` module — no media
     library) from an int16 sample array."""
     import io
     import wave
-
-    import numpy as np
 
     buf = io.BytesIO()
     with wave.open(buf, "wb") as w:
@@ -351,8 +267,6 @@ def decode_pcm_wav(payload: bytes) -> dict:
     import io
     import wave
 
-    import numpy as np
-
     with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
         if w.getnchannels() != 1:
             raise ValueError(f"unsupported channels {w.getnchannels()}")
@@ -363,28 +277,18 @@ def decode_pcm_wav(payload: bytes) -> dict:
         return {"sample_rate": w.getframerate(), "n_samples": n, "samples": samples}
 
 
-def encode_embedding_wav(
-    df: DataFrame, id_col: str, vec_col: str, sample_rate: int = 16000
-) -> DataFrame:
-    """Render each float vector as a real PCM16 WAV payload: sample =
-    clamp(floor(x * 32767), -32768, 32767) in float64 — IEEE-exact, so
-    an oracle can recompute every sample from the raw floats."""
-    import numpy as np
+def encode_embedding_wav(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """Render each float vector as a real PCM16 WAV payload at
+    SAMPLE_RATE: sample = clamp(floor(x * 32767), -32768, 32767) in
+    float64 — IEEE-exact, so an oracle can recompute every sample from
+    the raw floats."""
 
-    from ..shipping import ensure_package_on_executors
+    def rows(i, vec):
+        a = np.asarray(vec, dtype=np.float64)
+        s = np.clip(np.floor(a * 32767.0), -32768, 32767).astype(np.int16)
+        yield i, encode_pcm_wav(s)
 
-    ensure_package_on_executors(df.sparkSession)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for vec in pdf[vec_col]:
-                a = np.asarray(vec, dtype=np.float64)
-                s = np.clip(np.floor(a * 32767.0), -32768, 32767).astype(np.int16)
-                payloads.append(encode_pcm_wav(s, sample_rate))
-            yield pd.DataFrame({"id": pdf[id_col], "payload": payloads})
-
-    return df.select(id_col, vec_col).mapInPandas(compute, "id bigint, payload binary")
+    return _map_rows(df, id_col, vec_col, ENCODED_SCHEMA, rows)
 
 
 AUDIO_FEATURES_SCHEMA = (
@@ -393,47 +297,26 @@ AUDIO_FEATURES_SCHEMA = (
 )
 
 
-def audio_features(df: DataFrame, id_col: str, payload_col: str = "payload") -> DataFrame:
+def audio_features(df: DataFrame, id_col: str) -> DataFrame:
     """REAL audio decode-and-extract: WAV payloads are parsed by the
     stdlib reader and reduced to exact integer signal features — total
     absolute amplitude, peak |amplitude|, and strict zero crossings
     (sign product < 0) — each recomputable by an oracle from the
     pre-encode samples because PCM is lossless."""
-    import numpy as np
 
-    from ..shipping import ensure_package_on_executors
+    def rows(i, b):
+        d = decode_pcm_wav(b)
+        s = d["samples"].astype(np.int64)
+        yield (
+            int(i),
+            d["sample_rate"],
+            d["n_samples"],
+            int(np.abs(s).sum()),
+            int(np.abs(s).max()) if len(s) else 0,
+            int(((s[:-1] * s[1:]) < 0).sum()) if len(s) > 1 else 0,
+        )
 
-    ensure_package_on_executors(df.sparkSession)
-
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[payload_col]):
-                d = decode_pcm_wav(b)
-                s = d["samples"].astype(np.int64)
-                rows.append(
-                    (
-                        int(i),
-                        d["sample_rate"],
-                        d["n_samples"],
-                        int(np.abs(s).sum()),
-                        int(np.abs(s).max()) if len(s) else 0,
-                        int(((s[:-1] * s[1:]) < 0).sum()) if len(s) > 1 else 0,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "id",
-                    "sample_rate",
-                    "n_samples",
-                    "sum_abs",
-                    "peak",
-                    "zero_crossings",
-                ],
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, AUDIO_FEATURES_SCHEMA)
+    return _map_rows(df, id_col, PAYLOAD, AUDIO_FEATURES_SCHEMA, rows)
 
 
 IMAGE_PIXEL_STATS_SCHEMA = (
@@ -442,30 +325,22 @@ IMAGE_PIXEL_STATS_SCHEMA = (
 )
 
 
-def image_pixel_stats(df: DataFrame, id_col: str, payload_col: str = "payload") -> DataFrame:
-    """REAL decode-and-extract over mapInPandas: each payload is decoded
-    by the pure-stdlib PNG codec and reduced to exact pixel statistics
-    (sum / min / max over every sample of every channel) — lossless-
-    codec ground truth an oracle can recompute from the pre-encode
-    values.  Same Arrow batch shape and package-shipping needs as
-    `image_features`."""
-    from ..shipping import ensure_package_on_executors
+def image_pixel_stats(df: DataFrame, id_col: str) -> DataFrame:
+    """REAL decode-and-extract: each payload is decoded by the pure-stdlib
+    PNG codec and reduced to exact pixel statistics (sum / min / max over
+    every sample of every channel) — lossless-codec ground truth an
+    oracle can recompute from the pre-encode values."""
 
-    ensure_package_on_executors(df.sparkSession)
+    def rows(i, b):
+        f = decode_image(bytes(b))
+        yield (
+            i,
+            f["width"],
+            f["height"],
+            f["mode"],
+            int(f["pixels"].astype("int64").sum()),
+            int(f["pixels"].min()),
+            int(f["pixels"].max()),
+        )
 
-    def compute(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [decode_image(bytes(b)) for b in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    "id": pdf[id_col],
-                    "width": [f["width"] for f in feats],
-                    "height": [f["height"] for f in feats],
-                    "mode": [f["mode"] for f in feats],
-                    "px_sum": [int(f["pixels"].astype("int64").sum()) for f in feats],
-                    "px_min": [int(f["pixels"].min()) for f in feats],
-                    "px_max": [int(f["pixels"].max()) for f in feats],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(compute, IMAGE_PIXEL_STATS_SCHEMA)
+    return _map_rows(df, id_col, PAYLOAD, IMAGE_PIXEL_STATS_SCHEMA, rows)

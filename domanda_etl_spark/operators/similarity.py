@@ -22,14 +22,22 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import vectors as V
+from .windows import top_k_per_group
 
 
 def _sim(qcol: str, ccol: str):
     return F.round(V.cosine(F.col(qcol), F.col(ccol)), 6)
+
+
+def _rank(scored: DataFrame, k: int) -> DataFrame:
+    """(q_id, n_id, sim) -> the k best neighbors per query with their
+    1-based rank; ties break on neighbor id."""
+    order = [F.col("sim").desc(), F.col("n_id").asc()]
+    return top_k_per_group(scored, ["q_id"], order, k, rank_col="rank")
 
 
 def cosine_topk_bruteforce(
@@ -51,12 +59,7 @@ def cosine_topk_bruteforce(
         c.join(q, F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id", _sim("q_vec", "n_vec").alias("sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    return _rank(scored, k)
 
 
 def random_planes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -141,12 +144,7 @@ def cosine_topk_ivf(
         .filter(F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id", _sim("q_vec", "n_vec").alias("sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    return _rank(scored, k)
 
 
 def cosine_topk_lsh(
@@ -180,9 +178,4 @@ def cosine_topk_lsh(
         .filter(F.col("q_id") != F.col("n_id"))
         .select("q_id", "n_id", _sim("q_vec", "n_vec").alias("sim"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "n_id", "sim", "rank")
-    )
+    return _rank(scored, k)

@@ -1,5 +1,5 @@
 """Multimodal plumbing tests: binary payloads through Arrow-batched
-mapInPandas with the stubbed codec."""
+mapInPandas, the real PNG codec, box resize and the WAV reader/writer."""
 
 from __future__ import annotations
 
@@ -15,13 +15,6 @@ def test_media_metadata_roundtrip(spark):
     assert out[1]["byte_len"] == 5
     assert out[1]["prefix_hex"] == "68656C6C"
     assert out[2]["byte_len"] == 6  # é is 2 bytes in utf-8
-
-
-def test_image_features_fake_codec(spark):
-    df = spark.createDataFrame([(1, "x" * 100)], "id long, text string")
-    payload = multimodal.with_binary_payload(df, "text")
-    row = multimodal.image_features(payload, "id", fake=True).collect()[0]
-    assert (row["width"], row["height"], row["mode"]) == (100, 700, "FAKE")
 
 
 def test_unknown_formats_still_raise():

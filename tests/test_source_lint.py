@@ -55,6 +55,13 @@ def test_no_topandas_in_library():
     assert _occurrences(r"\.toPandas\(") == {}
 
 
+def test_one_map_in_pandas_call_in_library():
+    # every mapInPandas operator is a per-row function handed to
+    # multimodal._map_rows, which owns the package shipping and the
+    # Arrow-batch loop; a second call site is a copy of that plumbing
+    assert _occurrences(r"mapInPandas\(") == {"operators/multimodal.py": 1}
+
+
 def test_no_row_at_a_time_udfs_in_library():
     # mapInPandas / applyInPandasWithState (Arrow-batched) are the sanctioned
     # Python escape hatches; F.udf / @udf row-at-a-time is banned

@@ -212,7 +212,6 @@ HEADLINE = [
 # mapInPandas family, and the Spark 4 Python UDTF surface proof, which
 # plans as ArrowEvalPythonUDTF), never row-at-a-time eval.
 ARROW_PYTHON_OK = frozenset({
-    "image_features_fake",
     "media_frame_extract",
     "image_decode_roundtrip",
     "image_resize_boxfilter",
