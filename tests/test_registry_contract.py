@@ -135,7 +135,7 @@ def test_freeze_hash_sees_package_helper_edits(tmp_path, monkeypatch):
 
     def edit(rel: str) -> dict[str, str]:
         mod = pkg_copy / rel
-        mod.write_text(mod.read_text() + "\n# post-freeze re-plan\n")
+        mod.write_text(mod.read_text() + "\n_POST_FREEZE_REPLAN = 1\n")
         B._file_hash.cache_clear()  # path unchanged, content changed
         return {n: B.source_hash(n) for n in names}
 
@@ -163,3 +163,41 @@ def test_freeze_hash_sees_package_helper_edits(tmp_path, monkeypatch):
     assert fifth["versioned_sink_roundtrip"] != fourth["versioned_sink_roundtrip"]
     for n in ("group_agg_pricing_summary", "pagerank_purchases", "dedup_cluster_assignment"):
         assert fifth[n] == fourth[n], n
+
+
+def test_freeze_hash_ignores_comment_and_docstring_edits(tmp_path, monkeypatch):
+    """Stamps hash a package module's code, not its bytes: comments,
+    blank lines and module or function docstring edits drift no stamp, so
+    documentation fixes do not force queries into the correctness window."""
+    import shutil
+
+    from tools import backlog as B
+
+    names = ("label_propagation_communities", "pagerank_purchases")
+    before = {n: B.source_hash(n) for n in names}
+    pkg_copy = tmp_path / "domanda_etl_spark"
+    shutil.copytree(B.PKG_ROOT, pkg_copy)
+    monkeypatch.setattr(B, "PKG_ROOT", str(pkg_copy))
+    mod = pkg_copy / "operators" / "graph.py"
+    src = mod.read_text()
+    edited = (
+        src.replace('"""', '"""Edited module docstring.\n\n', 1)  # module docstring
+        .replace("def pagerank_integer(", "# a new comment\n\n\ndef pagerank_integer(", 1)
+        .replace('"""Fixed-iteration PageRank', '"""Fixed-iteration (edited) PageRank', 1)
+        + "\n\n# trailing comment\n"
+    )
+    assert edited != src
+    mod.write_text(edited)
+    B._file_hash.cache_clear()
+    assert {n: B.source_hash(n) for n in names} == before
+
+
+def test_queries_md_rows_follow_queries_order():
+    """QUERIES.md lists the registry in the order queries() yields: the
+    window that `tools/backlog.py --freeze` composed, then the rest."""
+    import re
+
+    path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "QUERIES.md")
+    with open(path) as f:
+        rows = re.findall(r"^\| \d+ \| `([^`]+)` \|", f.read(), re.M)
+    assert rows == ent._ordered_names()

@@ -1,5 +1,7 @@
-"""Pin the two claims tools/scale_probe.py's cipher-replica corpus
-construction makes (VERDICT r8 ask #5 / r9 ask #2):
+"""Pin tools/scale_probe.py's replica writer, `write_replicas`: its row
+counts, key offsets, block alignment, ciphers and row groups, and the two
+claims its cipher-replica corpus construction makes (VERDICT r8 ask #5 /
+r9 ask #2):
 
 1. ISOMORPHISM — replica k's 12-char-shingle similarity graph is
    isomorphic to the original corpus's, because caesar_table(k) is a
@@ -22,11 +24,13 @@ import string
 import sys
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools.scale_probe import build_doc_replicas, caesar_table  # noqa: E402
+from tools.scale_probe import CORPORA, Spec, caesar_table, write_replicas  # noqa: E402
 
 # letter-heavy toy corpus: three >=0.5-Jaccard near-dup pairs plus four
 # unrelated docs.  No repeated-space runs, so every 12-char shingle
@@ -56,6 +60,22 @@ def _toy_docs() -> pd.DataFrame:
             "n_chars": [len(t) for t in _TOY_TEXTS],
         }
     )
+
+
+def _replicate(tmp_path, frame: pd.DataFrame, spec: Spec, name: str) -> pd.DataFrame:
+    """Run the shipped writer on `frame` (written as src/<name>.parquet)."""
+    (tmp_path / "src").mkdir(exist_ok=True)
+    src = str(tmp_path / "src" / f"{name}.parquet")
+    pq.write_table(pa.Table.from_pandas(frame, preserve_index=False), src)
+    out = str(tmp_path / "out" / f"{name}.parquet")
+    write_replicas(src, spec, out)
+    return pq.read_table(out).to_pandas()
+
+
+def _doc_replicas(tmp_path, docs: pd.DataFrame, replicas: int) -> pd.DataFrame:
+    """The sf1 documents spec (Caesar cipher) at `replicas` copies."""
+    spec = CORPORA["sf1"]["documents"]._replace(replicas=replicas)
+    return _replicate(tmp_path, docs, spec, "documents")
 
 
 def _shingles(text: str, w: int = 12) -> frozenset:
@@ -93,18 +113,18 @@ def test_caesar_tables_are_bijective_and_distinct():
     assert "a b,c 9".translate(caesar_table(3)) == "d e,f 9"
 
 
-def test_replica_zero_is_identity():
+def test_replica_zero_is_identity(tmp_path):
     docs = _toy_docs()
-    out = build_doc_replicas(docs, 3)
+    out = _doc_replicas(tmp_path, docs, 3)
     rep0 = out.iloc[: len(docs)].reset_index(drop=True)
     assert rep0["text"].tolist() == docs["text"].tolist()
     assert rep0["doc_id"].tolist() == docs["doc_id"].tolist()
 
 
-def test_replicas_rowcount_and_disjoint_id_ranges():
+def test_replicas_rowcount_and_disjoint_id_ranges(tmp_path):
     docs = _toy_docs()
     k = 4
-    out = build_doc_replicas(docs, k)
+    out = _doc_replicas(tmp_path, docs, k)
     assert len(out) == k * len(docs)
     stride = int(docs["doc_id"].max()) + 1
     ranges = []
@@ -119,12 +139,49 @@ def test_replicas_rowcount_and_disjoint_id_ranges():
     assert out["doc_id"].is_unique
 
 
-def test_more_than_26_replicas_rejected():
+def test_more_than_26_replicas_rejected(tmp_path):
     with pytest.raises(ValueError, match="1..26"):
-        build_doc_replicas(_toy_docs(), 27)
+        _doc_replicas(tmp_path, _toy_docs(), 27)
+    # an interrupted build leaves no table behind for the next run to trust
+    assert not (tmp_path / "out" / "documents.parquet").exists()
 
 
-def test_pair_count_grows_exactly_linearly_brute_force():
+def test_write_replicas_offsets_blocks_ciphers_row_groups(tmp_path):
+    """The writer on a toy table: k x n rows; every offset column's
+    replicas occupy disjoint stride-sized ranges, the stride covering the
+    join partner's keys too and aligned to the block; replica r's text
+    passes through cipher(r); the row-group size is kept, across replica
+    boundaries or, with split, within each replica."""
+    n, k, rg = 10, 3, 4
+    toy = pd.DataFrame(
+        {
+            "a": list(range(n)),
+            "b": [i % 7 for i in range(n)],
+            "text": [f"Doc {i} abc xyz" for i in range(n)],
+        }
+    )
+    (tmp_path / "src").mkdir()
+    # b's join partner reaches 20, past b's own max of 6
+    pq.write_table(pa.table({"c": [3, 20]}), str(tmp_path / "src" / "other.parquet"))
+    for split, groups in ((False, [4] * 7 + [2]), (True, [4, 4, 2] * k)):
+        spec = Spec("sf0.1", {"a": None, "b": "other.c"}, block=8, cipher=caesar_table,
+                    replicas=k, rg=rg, split=split)
+        out = _replicate(tmp_path, toy, spec, f"toy_{split}")
+        meta = pq.ParquetFile(str(tmp_path / "out" / f"toy_{split}.parquet")).metadata
+        assert [meta.row_group(i).num_rows for i in range(meta.num_row_groups)] == groups
+        assert len(out) == k * n
+        for col, stride in (("a", 16), ("b", 24)):  # ceil((max + 1) / 8) * 8
+            for r in range(k):
+                rep = out[col].iloc[r * n : (r + 1) * n].reset_index(drop=True)
+                assert (rep == toy[col] + r * stride).all()
+                assert rep.min() >= r * stride and rep.max() < (r + 1) * stride
+        texts = [out["text"].iloc[r * n : (r + 1) * n].tolist() for r in range(k)]
+        for r in range(k):
+            assert texts[r] == [t.translate(caesar_table(r)) for t in toy["text"]]
+        assert len({tuple(t) for t in texts}) == k, "each replica has its own cipher"
+
+
+def test_pair_count_grows_exactly_linearly_brute_force(tmp_path):
     """Structural form of the isomorphism claim, no Spark: each replica
     contributes an identical (relabeled) pair set and no cross-replica
     pair exists, so pairs(k-replica corpus) == k * pairs(original)."""
@@ -132,7 +189,7 @@ def test_pair_count_grows_exactly_linearly_brute_force():
     base = _similar_pairs(docs)
     assert len(base) == 3, f"toy corpus must have 3 near-dup pairs, got {base}"
     k = 3
-    rep = build_doc_replicas(docs, k)
+    rep = _doc_replicas(tmp_path, docs, k)
     got = _similar_pairs(rep)
     assert len(got) == k * len(base)
     stride = int(docs["doc_id"].max()) + 1
@@ -146,35 +203,20 @@ def test_setsim_prefix_join_scales_linearly_on_replicas(spark, tmp_path):
     """The probe's actual measurement path: the registered
     setsim_prefix_join query over a replica corpus returns exactly k x
     the single-corpus pair count."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     import __spark_entry__ as ent
 
-    docs = _toy_docs()
     k = 3
-    single = tmp_path / "single"
-    tripled = tmp_path / "tripled"
-    for d in (single, tripled):
-        d.mkdir()
-    pq.write_table(
-        pa.Table.from_pandas(docs, preserve_index=False),
-        str(single / "documents.parquet"),
-    )
-    pq.write_table(
-        pa.Table.from_pandas(build_doc_replicas(docs, k), preserve_index=False),
-        str(tripled / "documents.parquet"),
-    )
+    _doc_replicas(tmp_path, _toy_docs(), k)
     q = ent.queries()["setsim_prefix_join"]
-    n1 = q(spark, str(single)).count()
-    nk = q(spark, str(tripled)).count()
+    n1 = q(spark, str(tmp_path / "src")).count()
+    nk = q(spark, str(tmp_path / "out")).count()
     assert n1 == 3, f"expected the 3 toy near-dup pairs, got {n1}"
     assert nk == k * n1, f"linear growth violated: {nk} != {k} * {n1}"
 
 
 @pytest.mark.slow
 def test_lpa_replica_band_graph_is_exact_copies(spark, tmp_path):
-    """The r15 LPA decade claim rests on build_customer()'s 20-block
+    """The r15 LPA decade claim rests on the sf1 customer spec's 20-block
     alignment: with the per-replica c_custkey offset rounded up to a
     multiple of the band graph's block width, every replica's block
     structure is an exact copy, so the LPA community SIZE DISTRIBUTION
@@ -188,29 +230,15 @@ def test_lpa_replica_band_graph_is_exact_copies(spark, tmp_path):
     replica's original max (the original corpus was cut there, the
     interior replicas are not), shifting a handful of tail-community
     sizes while the community COUNT stays exactly k-fold.  Negligible
-    for decade timing (<= 8 vertices per replica); documented in
-    build_customer()'s docstring."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
+    for decade timing (<= 8 vertices per replica); documented at the
+    customer spec in CORPORA."""
     import __spark_entry__ as ent
 
     cust = pd.DataFrame({"c_custkey": list(range(1, 100))})  # 5 full blocks
     k = 3
-    single = tmp_path / "single"
-    tripled = tmp_path / "tripled"
-    for d in (single, tripled):
-        d.mkdir()
-    t = pa.Table.from_pandas(cust, preserve_index=False)
-    pq.write_table(t, str(single / "customer.parquet"))
-    base = int(cust["c_custkey"].max()) + 1
-    base += (-base) % 20  # the build_customer() rounding rule
-    parts = [
-        t.set_column(0, "c_custkey", pc.add(t.column("c_custkey"), r * base))
-        for r in range(k)
-    ]
-    pq.write_table(pa.concat_tables(parts), str(tripled / "customer.parquet"))
+    spec = CORPORA["sf1"]["customer"]._replace(replicas=k)
+    _replicate(tmp_path, cust, spec, "customer")
+    single, tripled = tmp_path / "src", tmp_path / "out"
 
     q = ent.queries()["label_propagation_communities"]
     # community size histogram {n_members: count}, top-50-free via collect

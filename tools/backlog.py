@@ -5,12 +5,14 @@ That window, and a sha256 stamp per registry query, live together in
 WINDOW_FREEZE.json; `__spark_entry__.py` reads the window back at import.
 
 Usage: python tools/backlog.py --freeze   (compose the window, re-stamp,
-                                           print what entered and left)
+                                           rewrite QUERIES.md, print what
+                                           entered and left)
        python tools/backlog.py --drift    (queries whose stamp drifted)
 
 A stamp is a sha256 of the query's source + oracle SQL + the code its
 plan transitively depends on, resolved by AST over the entry module:
-  - every domanda_etl_spark MODULE FILE the query's plan depends on —
+  - the code (not the comments or docstrings) of every
+    domanda_etl_spark MODULE FILE the query's plan depends on —
     via the entry module's package-import aliases (S, T, dedup, ...),
     function-local `from domanda_etl_spark...` imports, and the
     package's own transitive intra-package imports;
@@ -29,17 +31,20 @@ import ast
 import glob
 import hashlib
 import inspect
+import io
 import json
 import os
 import re
 import sys
 import textwrap
+import tokenize
 from functools import lru_cache
 from pathlib import Path
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 import __spark_entry__ as entrymod  # noqa: E402
+from tools import dump_queries  # noqa: E402
 
 FREEZE_FILE = "WINDOW_FREEZE.json"
 FLAGSHIP = "domanda_pipeline_full"
@@ -128,10 +133,36 @@ def _module_graph(root: str) -> dict[str, frozenset[str]]:
     return {m: close(m, frozenset()) for m in mods}
 
 
+_LINE_START = (tokenize.NEWLINE, tokenize.INDENT, tokenize.DEDENT)
+
+
 @lru_cache(maxsize=None)
 def _file_hash(root: str, mod: str) -> str:
+    """sha256 of the module's code as a token stream: comments, blank
+    lines, line wrapping, spacing and docstrings (any statement that is a
+    lone string) do not count, so a documentation-only edit drifts no
+    stamp.  Token text is stable across Python versions, except that
+    3.12+ splits an f-string into parts: moving the stamping interpreter
+    past 3.11 drifts the stamps of modules with f-strings once."""
     path, _ = _pkg_modules(root)[mod]
-    return hashlib.sha256(Path(path).read_bytes()).hexdigest()
+    toks = [
+        t
+        for t in tokenize.generate_tokens(io.StringIO(Path(path).read_text()).readline)
+        if t.type not in (tokenize.COMMENT, tokenize.NL, tokenize.ENDMARKER)
+    ]
+    lone = {
+        i
+        for i, t in enumerate(toks[:-1])
+        if t.type == tokenize.STRING
+        and toks[i + 1].type == tokenize.NEWLINE
+        and (i == 0 or toks[i - 1].type in _LINE_START)
+    }
+    words = [
+        tokenize.tok_name[t.type] if t.type in _LINE_START else t.string
+        for i, t in enumerate(toks)
+        if i not in lone and i - 1 not in lone  # the string and its line end
+    ]
+    return hashlib.sha256("\0".join(words).encode()).hexdigest()
 
 
 # ---- entry-module AST maps (parsed once; the entry file never changes
@@ -271,7 +302,8 @@ def compose(drifted: list[str], previous: list[str], last: dict[str, int]) -> li
 
 def freeze() -> None:
     """Compose the window from the drift against the current stamps, then
-    write it with fresh stamps in one file write."""
+    write it with fresh stamps in one file write, and QUERIES.md in the
+    order queries() will yield once the entry module re-reads it."""
     previous = _frozen()["window"]
     window = compose(drift(), previous, evidence_rounds())
     stamps = {n: source_hash(n) for n in sorted(entrymod._REGISTRY)}
@@ -279,6 +311,7 @@ def freeze() -> None:
         json.dump({"window": window, "stamps": stamps}, f, indent=0, sort_keys=True)
         f.write("\n")
     print(f"froze {len(stamps)} query hashes and a {len(window)}-query window -> {FREEZE_FILE}")
+    dump_queries.main([*window, *(n for n in entrymod._REGISTRY if n not in window)])
     entered = [n for n in window if n not in previous]
     left = [n for n in previous if n not in window]
     print(f"entered ({len(entered)}): {', '.join(entered)}")

@@ -29,8 +29,10 @@ def first_line(fn) -> str:
     return ""
 
 
-def main() -> None:
-    names = entrymod._ordered_names()
+def main(names: list[str] | None = None) -> None:
+    """Write QUERIES.md with its rows in `names` order (default: the
+    order queries() yields)."""
+    names = names or entrymod._ordered_names()
     oracles = entrymod.oracle_sql()
     rows = []
     for i, n in enumerate(names):
